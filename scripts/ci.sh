@@ -34,6 +34,13 @@ sbt -batch "runMain graft.tools.DictLint"
 echo "== compile + test"
 sbt -batch test
 
+echo "== benchmark harness: run.py unit tests, perfbench build + tests"
+# perfbench/ compiles all of src/main/scala next to its own sources, and the
+# root build never compiles perfbench/: an engine change that breaks the
+# benchmark's use of the engine API would otherwise pass this gate.
+python3 -m unittest discover perfbench/tests
+(cd perfbench && sbt -batch test)
+
 echo "== correctness vs DuckDB oracle (sf0.01)"
 rm -rf /tmp/graft_ci_vout
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_ci_vout"

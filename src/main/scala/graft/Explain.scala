@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print formatted physical plans for the named queries (or all) — used to
   * audit pushdown/broadcast/codegen decisions per SURVEY.md §7.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -272,10 +272,12 @@ object Retrieval {
     val rels = candRows.map(_.getLong(2))
     val cds = candRows.map(_.getSeq[Long](3).toArray)
     val n = candRows.length
+    val dims = cds.map(_.length).distinct
+    require(dims.length == 1, "mmrDiversify: embedding column 'embedding' " +
+      s"has mixed dimensions ${dims.sorted.mkString(", ")} among the candidates")
     def dot(x: Array[Long], y: Array[Long]): Long = {
       var s = 0L; var i = 0
-      val m = math.min(x.length, y.length)
-      while (i < m) { s += x(i) * y(i); i += 1 }
+      while (i < x.length) { s += x(i) * y(i); i += 1 }
       s
     }
     // greedy loop — the exact integer recurrence of the r21 distributed

@@ -223,6 +223,11 @@ object HistogramQuantiles {
   def quantileBin(df: DataFrame, valueCol: String, buckets: Int,
       qs: Seq[Double]): DataFrame = {
     require(buckets >= 1 && qs.nonEmpty, "need buckets >= 1 and qs non-empty")
+    // one threshold per q is what the unrolled element_at below indexes:
+    // an out-of-range q hits no bucket and a repeated q shares one group,
+    // so either would leave fewer than |qs| thresholds
+    require(qs.forall(q => q >= 0.0 && q <= 1.0) && qs.distinct.size == qs.size,
+      s"quantileBin: qs must be distinct values in [0, 1], got ${qs.mkString("[", ", ", "]")}")
     val v = col(valueCol).cast("double")
     // the threshold row CARRIES lo/hi (thresholdHits folds the stats
     // constants through the histogram aggregate), so the per-row pass

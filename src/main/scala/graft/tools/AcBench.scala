@@ -70,9 +70,7 @@ object AcBench {
     // blocklists are word phrases whose shallow levels mirror corpus word
     // structure and most positions fail in 1-2 steps.
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val texts = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("text").collect().map(_.getString(0))
     spark.stop()

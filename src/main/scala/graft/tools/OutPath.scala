@@ -1,7 +1,7 @@
 package graft.tools
 
-/** Output-path guard for the arg-driven dump tools (PathDump, TokOut,
-  * BaseAudit, KatAudit, ModeDump, ModeRegen).
+/** Output-path guard for the arg-driven dump tools (PathDump, BaseAudit,
+  * KatAudit, ModeDump, ModeRegen).
   *
   * Root cause of the recurring zero-byte 45×`?` junk file at the repo root
   * (VERDICT r15 "What's wrong" #1): under a C-locale JVM

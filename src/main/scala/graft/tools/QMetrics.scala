@@ -1,6 +1,5 @@
 package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 /** Contention-robust work measurement for named SparkEntry queries: wall
@@ -13,13 +12,7 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   */
 object QMetrics {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val jobs = new AtomicLong; val stages = new AtomicLong
     val tasks = new LongAdder; val cpuNs = new LongAdder

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the TokenCountRewrite win: sum of size(split(text, ' ')) over
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object RuleBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)

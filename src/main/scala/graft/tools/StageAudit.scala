@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measured audit of the session-lived operator persists (Dedup.stage and
   * friends, VERDICT r21 #7): run the named queries through the noop sink,
   * then print every cached RDD's memory/disk footprint from
@@ -14,12 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object StageAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     args.foreach { name =>
       graft.SparkEntry.queries(name)(spark, dir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the TokenizeOnceRewrite win on the hazard shape — one select
@@ -11,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object TokenizeOnceBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     graft.Graft.register(spark)
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ == graft.rules.TokenizeOnceRewrite)

@@ -5,14 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all Spark-backed specs (forked test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.local(4)
     Graft.register(s)
     s
   }

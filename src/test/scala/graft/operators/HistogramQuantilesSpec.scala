@@ -95,6 +95,18 @@ class HistogramQuantilesSpec extends AnyFunSuite {
     assert(out.where(org.apache.spark.sql.functions.col("lo") === 9.9).count() == 1)
   }
 
+  test("quantileBin rejects a q outside [0, 1] and a repeated q") {
+    // either input leaves fewer thresholds than |qs|; unchecked, ANSI
+    // element_at fails at run time with INVALID_ARRAY_INDEX_IN_ELEMENT_AT
+    Seq(Seq(0.5, 1.5), Seq(0.5, 0.5)).foreach { qs =>
+      val e = intercept[IllegalArgumentException] {
+        HistogramQuantiles.quantileBin(df((1 to 100).map(_.toDouble)), "x", 16, qs)
+      }
+      assert(e.getMessage.contains("quantileBin") && e.getMessage.contains("qs"),
+        e.getMessage)
+    }
+  }
+
   test("result is partition-layout independent (the gate property)") {
     val base = df((1 to 1000).map(i => (i * 37 % 211).toDouble))
     val a = HistogramQuantiles.quantiles(base, "x", 32, Seq(0.25, 0.5, 0.75))

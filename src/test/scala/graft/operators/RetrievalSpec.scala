@@ -191,6 +191,19 @@ class RetrievalSpec extends AnyFunSuite {
     assert(out == Map(1 -> 1L, 2 -> 3L, 3 -> 2L), out)
   }
 
+  test("mmrDiversify: candidates with mixed embedding dimensions are rejected") {
+    import spark.implicits._
+    // unchecked, the driver-side dot truncates to the shorter code vector
+    val d = Seq(1L -> "a a b", 2L -> "a b b").toDF("doc_id", "text")
+    val e = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f, 0f)))
+      .toDF("vec_id", "embedding")
+    val ex = intercept[IllegalArgumentException] {
+      Retrieval.mmrDiversify(d, e, "doc_id", "text", Seq("a"), kLex = 2, kSel = 2)
+    }
+    assert(ex.getMessage.contains("mmrDiversify") &&
+      ex.getMessage.contains("embedding"), ex.getMessage)
+  }
+
   test("mmrDiversify: λ→1 degenerates to the lexical ranking") {
     import spark.implicits._
     val d = Seq(1L -> "a a a", 2L -> "a a b", 3L -> "a b b").toDF("doc_id", "text")
