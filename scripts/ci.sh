@@ -41,6 +41,17 @@ echo "== benchmark harness: run.py unit tests, perfbench build + tests"
 python3 -m unittest discover perfbench/tests
 (cd perfbench && sbt -batch test)
 
+echo "== benchmark pipeline_ops run: sf0.1 result digests"
+# Verify runs at sf0.01; this run is the only sf0.1 digest check of the
+# pipeline panel (q116, q187, ...). Its last line is the result record.
+python3 perfbench/run.py --workload pipeline_ops --seed 1 --seconds 20 | tail -n 1 |
+  python3 -c '
+import json, sys
+r = json.loads(sys.stdin.read())
+if r.get("correct") is not True or r.get("failed") != 0:
+    sys.exit("[ci.sh] perfbench pipeline_ops: correct=%s failed=%s" % (r.get("correct"), r.get("failed")))
+print("[ci.sh] perfbench pipeline_ops: correct, 0 failed")'
+
 echo "== correctness vs DuckDB oracle (sf0.01)"
 rm -rf /tmp/graft_ci_vout
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_ci_vout"

@@ -122,6 +122,42 @@ object Kernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
+  /** Token-level content-defined chunks of a space-separated text, one
+    * code-point pass: `[(chunk_idx, n_tokens, chunk_hash)]` in text order.
+    * Tokens follow Spark `split(text, " ")` (empty tokens count; "" is one
+    * empty token). A token whose polyHash ≡ 0 (mod `modulus`) closes its
+    * chunk — the empty token hashes to 0, so it always does. A chunk's text
+    * is exactly the input substring from its first token to its last, so
+    * `chunk_hash` is the running polyHash over that substring (the
+    * separating spaces included) and no token or chunk string is built.
+    */
+  def cdcChunks(s: UTF8String, modulus: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    val str = s.toString
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var tokHash = 0L
+    var chunkHash = 0L
+    var nTok = 0
+    var i = 0
+    while (i <= str.length) {
+      val cp = if (i < str.length) str.codePointAt(i) else ' '
+      if (cp == ' ') {
+        nTok += 1
+        if (tokHash % modulus == 0 || i == str.length) {
+          out += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+            Array[Any](out.length, nTok, chunkHash))
+          chunkHash = 0L
+          nTok = 0
+        } else chunkHash = (chunkHash * 131 + ' ') % 1000000007L
+        tokHash = 0L
+      } else {
+        tokHash = (tokHash * 131 + cp) % 1000000007L
+        chunkHash = (chunkHash * 131 + cp) % 1000000007L
+      }
+      i += Character.charCount(cp)
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+  }
+
   private final val RollB1 = 0x100000001b3L // FNV-1a 64 prime (odd)
   private final val RollB2 = 6364136223846793005L // Knuth LCG multiplier (odd)
 
@@ -235,22 +271,7 @@ object Kernels {
     while (wi < words.length) {
       val w = words(wi)
       if (w.nonEmpty) {
-        val sb = new java.lang.StringBuilder(w.length * 2 + 2)
-        sb.append(' ')
-        var ci = 0
-        while (ci < w.length) {
-          val cp = w.codePointAt(ci)
-          sb.appendCodePoint(cp).append(' ')
-          ci += Character.charCount(cp)
-        }
-        var form = sb.toString
-        var mi = 0
-        while (mi < patterns.length) {
-          form = form.replace(patterns(mi), replacements(mi))
-          form = form.replace(patterns(mi), replacements(mi))
-          mi += 1
-        }
-        val syms = form.split(" ", -1)
+        val syms = bpeForm(w, patterns, replacements).split(" ", -1)
         var si = 0
         while (si < syms.length) {
           if (syms(si).nonEmpty) out += UTF8String.fromString(syms(si))
@@ -260,6 +281,31 @@ object Kernels {
       wi += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+  }
+
+  /** One non-empty word's sentinel-spaced symbol form " s1 s2 … " after
+    * the merges `patterns(i)` = " l r " → `replacements(i)` = " lr ", in
+    * order, each as the double leftmost-non-overlapping replace. The one
+    * merge walk shared by [[bpeSegment]] and the TextAnalysis.bpeMerges
+    * learner, so the two cannot drift.
+    */
+  def bpeForm(w: String, patterns: Array[String], replacements: Array[String]): String = {
+    val sb = new java.lang.StringBuilder(w.length * 2 + 2)
+    sb.append(' ')
+    var ci = 0
+    while (ci < w.length) {
+      val cp = w.codePointAt(ci)
+      sb.appendCodePoint(cp).append(' ')
+      ci += Character.charCount(cp)
+    }
+    var form = sb.toString
+    var mi = 0
+    while (mi < patterns.length) {
+      form = form.replace(patterns(mi), replacements(mi))
+      form = form.replace(patterns(mi), replacements(mi))
+      mi += 1
+    }
+    form
   }
 
   /** Unigram-LM Viterbi segmentation (Kudo 2018 §3, the SentencePiece
@@ -1111,32 +1157,37 @@ object Kernels {
     * for the interpreted `aggregate(array_sort(ts), 0.0, (acc,x) ->
     * acc + x.v)` HOF in the BM25 per-document rollup (Retrieval) and the
     * margin neighborhood means (Similarity). Bit-identical to the HOF
-    * form: the sort order matches array_sort's struct comparison on the
-    * reachable inputs (keys are groupBy/row_number outputs — distinct and
-    * non-null per array, so field 0 alone decides; the v tie-break is
-    * belt-and-braces), and the accumulation is the same left-to-right
-    * IEEE double chain. Any null element or null field yields null (the
-    * HOF's acc + null = null). `keyKind`: 0 = string, 1 = int, 2 = long.
+    * form: the order is array_sort's struct comparison (a null key sorts
+    * before every non-null key, as in Spark's ascending struct ordering;
+    * equal keys fall to v), and the accumulation is the same
+    * left-to-right IEEE double chain. A null element or a null v yields
+    * null (the HOF's acc + null = null); a null key alone does not.
+    * `keyKind`: 0 = string, 1 = int, 2 = long.
     */
   def orderedStructDoubleSum(a: ArrayData, keyKind: Int): java.lang.Double = {
     val n = a.numElements
     if (n == 0) return java.lang.Double.valueOf(0.0)
     val sKeys = if (keyKind == 0) new Array[UTF8String](n) else null
     val lKeys = if (keyKind != 0) new Array[Long](n) else null
+    val nullKey = new Array[Boolean](n)
     val vals = new Array[Double](n)
     var i = 0
     while (i < n) {
       if (a.isNullAt(i)) return null
       val row = a.getStruct(i, 2)
-      if (row.isNullAt(0) || row.isNullAt(1)) return null
-      if (keyKind == 0) sKeys(i) = row.getUTF8String(0)
-      else lKeys(i) = if (keyKind == 1) row.getInt(0).toLong else row.getLong(0)
+      if (row.isNullAt(1)) return null
+      nullKey(i) = row.isNullAt(0)
+      if (!nullKey(i)) {
+        if (keyKind == 0) sKeys(i) = row.getUTF8String(0)
+        else lKeys(i) = if (keyKind == 1) row.getInt(0).toLong else row.getLong(0)
+      }
       vals(i) = row.getDouble(1)
       i += 1
     }
     // insertion sort: arrays are query-term / top-k sized (tens of entries)
     i = 1
     while (i < n) {
+      val nk = nullKey(i)
       val sk = if (sKeys != null) sKeys(i) else null
       val lk = if (lKeys != null) lKeys(i) else 0L
       val v = vals(i)
@@ -1144,14 +1195,17 @@ object Kernels {
       var cont = true
       while (j >= 0 && cont) {
         val c =
-          if (sKeys != null) sKeys(j).compareTo(sk)
+          if (nullKey(j) || nk) java.lang.Boolean.compare(!nullKey(j), !nk)
+          else if (sKeys != null) sKeys(j).compareTo(sk)
           else java.lang.Long.compare(lKeys(j), lk)
         if (c > 0 || (c == 0 && java.lang.Double.compare(vals(j), v) > 0)) {
+          nullKey(j + 1) = nullKey(j)
           if (sKeys != null) sKeys(j + 1) = sKeys(j) else lKeys(j + 1) = lKeys(j)
           vals(j + 1) = vals(j)
           j -= 1
         } else cont = false
       }
+      nullKey(j + 1) = nk
       if (sKeys != null) sKeys(j + 1) = sk else lKeys(j + 1) = lk
       vals(j + 1) = v
       i += 1

@@ -174,6 +174,36 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** `cdc_chunks(text, modulus) → array<struct<chunk_idx:int, n_tokens:int,
+  * chunk_hash:bigint>>`: token-level content-defined chunks of a
+  * space-separated text in one codegen'd code-point pass (see
+  * [[Kernels.cdcChunks]]) — the per-row kernel of Dedup.cdcChunks. Values
+  * are bit-identical to the posexplode + running-window + collect_list
+  * formulation and its graft_hash64 of the joined chunk, so the DuckDB
+  * oracle is unchanged.
+  */
+case class CdcChunks(child: Expression, modulus: Int) extends UnaryExpression {
+
+  require(modulus >= 2, s"modulus must be >= 2, got $modulus")
+  override def prettyName: String = "cdc_chunks"
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("chunk_idx", IntegerType, nullable = false),
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("chunk_hash", LongType, nullable = false))), containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckSuccess
+    else TypeCheckFailure(s"$prettyName expects a string argument")
+
+  override def nullSafeEval(v: Any): Any =
+    Kernels.cdcChunks(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], modulus)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.expr.Kernels.cdcChunks($c, $modulus)")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** `rolling_window_hashes(text, win) → array<binary>`: 128-bit (16-byte)
   * fingerprints of every win-token window of a space-separated text, in
   * order — the O(n) rolling replacement for the O(n·L) per-position
@@ -791,8 +821,8 @@ case class WordRepetitionStats(child: Expression) extends UnaryExpression {
   * (key, v) ascending and left-fold v from 0.0: the whole-stage-codegen
   * replacement for `aggregate(array_sort(ts), 0.0, (acc,x) -> acc + x.v)`,
   * which runs as an INTERPRETED higher-order function (HOFs are
-  * CodegenFallback through Spark 4.x). Bit-identical on the reachable
-  * inputs — see [[Kernels.orderedStructDoubleSum]] for the order and null
+  * CodegenFallback through Spark 4.x). Bit-identical, null keys included
+  * — see [[Kernels.orderedStructDoubleSum]] for the order and null
   * contracts. Key types: string, int, long.
   */
 case class OrderedStructSum(child: Expression) extends UnaryExpression {

@@ -92,6 +92,18 @@ object functions {
   def shingle_hashes(text: Column, k: Int): Column =
     toCol(graft.expr.ShingleHashes(toExpr(text), k))
 
+  /** Token-level content-defined chunks of a space-separated text:
+    * `array<struct<chunk_idx:int, n_tokens:int, chunk_hash:bigint>>`, one
+    * element per chunk in text order (codegen'd; see graft.expr.CdcChunks).
+    * Tokens follow `split(text, " ")`: empty tokens count, and "" is one
+    * empty token. A token whose graft_hash64 is ≡ 0 (mod `modulus`) closes
+    * its chunk (the empty token always does); `chunk_hash` is graft_hash64
+    * of the chunk's text, the input substring from its first token to its
+    * last. Null text gives null. `modulus` must be >= 2.
+    */
+  def cdc_chunks(text: Column, modulus: Int): Column =
+    toCol(graft.expr.CdcChunks(toExpr(text), modulus))
+
   /** 128-bit fingerprints of all win-token windows of a space-separated
     * text, O(n) rolling (codegen'd; see graft.expr.RollingWindowHashes).
     */

@@ -602,34 +602,20 @@ object Dedup {
     * `shared` flag (fingerprint occurs in more than one document) — the
     * shift-robust near-dup evidence.
     *
-    * Scale shape: boundary flags and chunk indices are per-document
-    * windows (ONE shuffle keyed by doc), the chunk gather reuses the same
-    * doc-keyed partitioning, and the cross-corpus `shared` count is ONE
-    * exchange keyed by the 8-byte chunk fingerprint — no text travels on
-    * it beyond the row itself. All hashes are graft_hash64, so the DuckDB
-    * oracle reproduces every boundary and fingerprint bit-for-bit.
+    * Scale shape: boundaries, chunk indices, token counts and chunk
+    * fingerprints come from ONE codegen'd pass per document
+    * (graft.functions.cdc_chunks: no token explode, no chunk string, no
+    * lambda), inlined to one row per chunk; the cross-corpus `shared`
+    * count is then the only exchange, keyed by the 8-byte chunk
+    * fingerprint — no text travels on it. All hashes are graft_hash64, so
+    * the DuckDB oracle reproduces every boundary and fingerprint
+    * bit-for-bit.
     */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
       modulus: Int = 8): DataFrame = {
     require(modulus >= 2, s"modulus must be >= 2, got $modulus")
-    import graft.functions.graft_hash64
-    val byDocPos = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
-    val toks = df.select(col(idCol).cast("long").as("doc_id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    // chunk index = number of boundary tokens STRICTLY BEFORE this one:
-    // a boundary token closes its own chunk
-    val chunked = toks
-      .withColumn("boundary", graft_hash64(col("tok")) % modulus === 0)
-      .withColumn("chunk_idx",
-        (sum(when(col("boundary"), 1L).otherwise(0L)).over(byDocPos) -
-          when(col("boundary"), 1L).otherwise(0L)).cast("int"))
-    val chunks = chunked.groupBy("doc_id", "chunk_idx")
-      .agg(count(lit(1)).cast("int").as("n_tokens"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("tok")))),
-          s => s.getField("tok")), " ").as("chunk"))
-      .withColumn("chunk_hash", graft_hash64(col("chunk")))
+    val chunks = df.select(col(idCol).cast("long").as("doc_id"),
+      inline(graft.functions.cdc_chunks(col(textCol), modulus)))
     // DISTINCT aggregates aren't available as window functions; min≠max of
     // doc_id over the fingerprint partition is the same cross-document test
     val multi = org.apache.spark.sql.expressions.Window.partitionBy("chunk_hash")

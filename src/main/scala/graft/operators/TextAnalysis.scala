@@ -1595,110 +1595,98 @@ object TextAnalysis {
     * tokenizer): `steps` greedy merges of the most frequent adjacent
     * symbol pair, ties to the lexicographically smallest pair. Returns the
     * learned merge table — (step, left, right, merged, pair_count) — which
-    * IS the trained tokenizer artifact.
+    * IS the trained tokenizer artifact, as a local relation: collecting it
+    * runs no Spark job.
     *
     * Scale shape (the classic BPE factorization): ONE corpus scan builds
-    * the (word, count) table — the only corpus-sized shuffle — and every
-    * merge iteration after that touches ONLY the vocabulary-sized frame:
-    * pair counts are a map-side-combined hash agg over distinct words
-    * weighted by their counts, the argmax is one TakeOrdered(1) single-row
-    * collect per step (the kCenterGreedy bounded-collect convention, k
-    * rows total), and the merge application is a pure projection. At
-    * 100 TB the corpus is read once; iteration cost is independent of
-    * corpus size. localCheckpoint per step truncates the k-deep lineage.
+    * the (word, count) table — the only corpus-sized shuffle, localCheckpointed
+    * once — and every merge step after that is ONE Spark job over those
+    * vocabulary-sized rows: each word is rebuilt through the merges so far
+    * (Kernels.bpeForm, the walk bpe_segment applies, so learner and apply
+    * cannot drift), its overlapping adjacent pairs are emitted weighted by
+    * the word count (the reference get_stats), reduceByKey sums them, and a
+    * fold picks the best pair. k steps cost k jobs plus the word count; no
+    * per-step plan is built. At 100 TB the corpus is read once; iteration
+    * cost is independent of corpus size.
     *
     * Exactness: symbols ride a sentinel-spaced string (" c1 c2 … "), so
-    * pair application is standard leftmost non-overlapping `replace` —
-    * bit-identical in Spark and DuckDB and exactly BPE's greedy
-    * left-to-right merge (overlapping pair COUNTS, as in the reference
-    * get_stats, come from the adjacent-pair explode). Counts are integer;
-    * ordering is (count desc, pair asc) — no floats anywhere. Characters
-    * are code points via substr; the synthetic corpus is ASCII so Spark
-    * and DuckDB substr agree (documented caveat for astral-plane text).
+    * pair application is standard leftmost non-overlapping `replace`
+    * applied twice — bit-identical in Spark and DuckDB and exactly BPE's
+    * greedy left-to-right merge. Counts are integer; ordering is (count
+    * desc, "l r" asc in UTF-8 byte order — Spark's string `asc`, not
+    * `String.compareTo`) — no floats anywhere. Characters are code points;
+    * the synthetic corpus is ASCII so Spark and DuckDB substr agree
+    * (documented caveat for astral-plane text in the oracle).
     */
   def bpeMerges(df: DataFrame, textCol: String, steps: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    bpeCore(df, textCol, steps)._1.toDF("step", "left", "right", "merged", "pair_count")
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    // Rows under an explicit schema: no reflective tuple encoder per call
+    val schema = StructType(Seq(StructField("step", IntegerType, nullable = false),
+      StructField("left", StringType), StructField("right", StringType),
+      StructField("merged", StringType), StructField("pair_count", LongType, nullable = false)))
+    df.sparkSession.createDataFrame(bpeCore(df, textCol, steps)._1
+      .map(m => org.apache.spark.sql.Row(m._1, m._2, m._3, m._4, m._5)).asJava, schema)
   }
 
   /** Corpus token frequencies AFTER `steps` BPE merges — the segmentation
-    * apply step for free: the learner's final vocabulary state already
-    * holds every distinct word's segmented symbol string, so corpus token
-    * frequencies are one vocabulary-sized explode weighted by word counts.
-    * No second corpus scan. Ties order (freq desc, token asc); top `k`.
+    * apply step for free: each distinct word of the learner's word-count
+    * table goes through bpe_segment with the learned merges, and its
+    * symbols are counted weighted by the word count — a vocabulary-sized
+    * projection and aggregate, no second corpus scan. Ties order
+    * (freq desc, token asc); top `k`.
     */
   def bpeVocabFreq(df: DataFrame, textCol: String, steps: Int, k: Int): DataFrame = {
     require(k >= 1, s"bpeVocabFreq: k must be >= 1, got $k")
-    val (_, vocab) = bpeCore(df, textCol, steps)
-    vocab
-      .select(col("cnt"), explode(split(trim(col("s")), " ")).as("token"))
+    val (merges, words) = bpeCore(df, textCol, steps)
+    words
+      .select(col("cnt"), explode(graft.functions.bpe_segment(col("w"),
+        merges.map(m => Array(m._2, m._3)).toArray)).as("token"))
       .groupBy("token").agg(sum("cnt").as("freq"))
       .orderBy(col("freq").desc, col("token").asc)
       .limit(k)
   }
 
+  /** The merge table and the localCheckpointed (w, cnt) word counts. */
   private def bpeCore(df: DataFrame, textCol: String, steps: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
     require(steps >= 1 && steps <= 64,
-      s"bpeMerges: steps must be in [1, 64] (one single-row collect per step), got $steps")
-    var vocab = df
+      s"bpeMerges: steps must be in [1, 64] (one Spark job per step), got $steps")
+    val words = df
       .select(explode(split(col(textCol), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(
-        concat(lit(" "),
-          expr("array_join(transform(sequence(1, char_length(w)), i -> substr(w, i, 1)), ' ')"),
-          lit(" ")).as("s"),
-        col("cnt"))
       .localCheckpoint()
+    val counts = words.queryExecution.toRdd.map(r => (r.getUTF8String(0).toString, r.getLong(1)))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var step = 1
     var exhausted = false
-    while (step <= steps && !exhausted) {
-      val best = vocab
-        .select(col("cnt"), split(trim(col("s")), " ").as("a"))
-        // single-symbol words contribute no pairs; the filter also dodges
-        // Spark's descending sequence(1, 0) on them (DuckDB's range(1, 1)
-        // is empty, so the oracle needs no guard)
-        .where(size(col("a")) >= 2)
-        .select(col("cnt"), explode(expr(
-          "transform(sequence(1, size(a) - 1), i -> concat(element_at(a, i), ' ', element_at(a, i + 1)))"))
-          .as("pair"))
-        .groupBy("pair").agg(sum("cnt").as("pc"))
-        .orderBy(col("pc").desc, col("pair").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
+    while (merges.length < steps && !exhausted) {
+      val patterns = merges.map(m => " " + m._2 + " " + m._3 + " ").toArray
+      val replacements = merges.map(m => " " + m._4 + " ").toArray
+      val (pair, pc) = counts
+        .flatMap { case (w, cnt) =>
+          val form = graft.expr.Kernels.bpeForm(w, patterns, replacements)
+          val a = form.substring(1, form.length - 1).split(" ", -1)
+          (1 until a.length).map(i => (a(i - 1) + " " + a(i), cnt))
+        }
+        .reduceByKey(_ + _)
+        .fold((null, 0L))((x, y) => if (bpeBetter(y, x)) y else x)
+      if (pair == null) exhausted = true
       else {
-        val pair = best(0).getString(0)
-        val pc = best(0).getLong(1)
         val Array(l, r) = pair.split(" ", 2)
-        merges += ((step, l, r, l + r, pc))
-        // Leftmost non-overlapping replace consumes the shared sentinel
-        // space between CONSECUTIVE occurrences (" a b a b " merges only
-        // the first), so apply it twice: pass 1 merges every unblocked
-        // occurrence, leaving the blocked ones isolated between fresh
-        // sentinels; pass 2 catches exactly those. Two passes reproduce
-        // BPE's greedy left-to-right merge on every run length (aaaa →
-        // [aa, aa]; aaa → [aa, a]).
-        def merge1(c: Column): Column =
-          replace(c, lit(" " + pair + " "), lit(" " + l + r + " "))
-        vocab = vocab.withColumn("s", merge1(merge1(col("s"))))
-        // No per-step checkpoint (r21): each step's best-pair aggregate is
-        // the only consumer of the accumulated replace chain, and replace
-        // is a narrow zero-shuffle projection over the vocabulary frame —
-        // re-running ≤ 8 accumulated layers from the last re-root is
-        // cheaper than materializing the frame every step (the r20 shape
-        // paid one extra eager job + full vocab write per merge, 2× the
-        // job count of the whole loop). The plan stays LINEAR in steps
-        // (single reference per step), so the re-root is purely a lineage
-        // bound, at the pageRankInt cadence.
-        if (step % 8 == 0 && step < steps) vocab = vocab.localCheckpoint()
-        step += 1
+        merges += ((merges.length + 1, l, r, l + r, pc))
       }
     }
-    (merges.toSeq, vocab)
+    (merges.toSeq, words)
   }
+
+  /** Best-pair order of the merge learner: count desc, then the "l r" pair
+    * asc in UTF-8 byte order; `(null, 0)` is the fold's identity.
+    */
+  private def bpeBetter(a: (String, Long), b: (String, Long)): Boolean =
+    b._1 == null || (a._1 != null && (a._2 > b._2 || (a._2 == b._2 &&
+      org.apache.spark.unsafe.types.UTF8String.fromString(a._1)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b._1)) < 0)))
 
   /** Adaptive per-source token floor: gate each document against its OWN
     * source's lower-quartile token count instead of one global constant —

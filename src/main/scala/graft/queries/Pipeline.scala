@@ -3281,7 +3281,7 @@ object Pipeline {
        |FROM syms ORDER BY id""".stripMargin) { (s, dir) =>
     val merges = graft.operators.TextAnalysis.bpeMerges(
         graft.queries.Tables.t(s, dir, "documents"), "text", steps = 8)
-      .orderBy("step").collect()
+      .collect().sortBy(_.getInt(0)) // a local relation: collected with no job
       .map(r => Array(r.getString(1), r.getString(2))) // bounded: exactly 8 rows
     graft.queries.Tables.t(s, dir, "part")
       .select(col("p_partkey").cast("long").as("id"),
@@ -3324,7 +3324,7 @@ object Pipeline {
        |FROM syms GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
     val docs = graft.queries.Tables.t(s, dir, "documents")
     val merges = graft.operators.TextAnalysis.bpeMerges(docs, "text", steps = 8)
-      .orderBy("step").collect()
+      .collect().sortBy(_.getInt(0)) // a local relation: collected with no job
       .map(r => Array(r.getString(1), r.getString(2))) // bounded: exactly 8 rows
     docs.select(col("source"),
         length(col("text")).cast("long").as("n_chars"),
@@ -5113,7 +5113,7 @@ object Pipeline {
     graft.Graft.register(s)
     val docs = t(s, dir, "documents")
     val merges = graft.operators.TextAnalysis.bpeMerges(docs, "text", steps = 8)
-      .orderBy("step").collect()
+      .collect().sortBy(_.getInt(0)) // a local relation: collected with no job
       .map(r => Array(r.getString(1), r.getString(2))) // bounded: exactly 8 rows
     TextAnalysis.fertilityByScript(docs, "doc_id", "text", merges)
       .orderBy("dominant")

@@ -305,4 +305,19 @@ class PlanShapeSpec extends AnyFunSuite {
     // the rarity rank is a per-doc window, never a single reducer
     assert(!p.contains("SinglePartition"), p)
   }
+
+  test("q116 plans no lambda, no collect_list and no window keyed by doc_id") {
+    val df = SparkEntry.queries("q116_cdc_chunks")(spark, sf)
+    val formatted = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert(!formatted.contains("lambdafunction"), formatted)
+    assert(!formatted.contains("collect_list"), formatted)
+    val windows = df.queryExecution.sparkPlan.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    assert(windows.nonEmpty, formatted)
+    windows.foreach { w =>
+      assert(!w.partitionSpec.flatMap(_.references).exists(_.name == "doc_id"), formatted)
+    }
+  }
 }

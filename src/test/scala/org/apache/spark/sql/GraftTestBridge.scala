@@ -1,0 +1,7 @@
+package org.apache.spark.sql
+
+/** Test access to Spark internals that are `private[spark]`. */
+object GraftTestBridge {
+  /** Blocks until every posted listener event has been delivered. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
