@@ -41,16 +41,23 @@ echo "== benchmark harness: run.py unit tests, perfbench build + tests"
 python3 -m unittest discover perfbench/tests
 (cd perfbench && sbt -batch test)
 
-echo "== benchmark pipeline_ops run: sf0.1 result digests"
+echo "== benchmark pipeline_ops run: sf0.1 result digests, no cache left behind"
 # Verify runs at sf0.01; this run is the only sf0.1 digest check of the
-# pipeline panel (q116, q187, ...). Its last line is the result record.
-python3 perfbench/run.py --workload pipeline_ops --seed 1 --seconds 20 | tail -n 1 |
+# pipeline panel (q116, q187, ...). Its last line is the result record; each
+# per-query record carries cached_left, the CacheManager entries the query
+# left behind, which must be 0 (no operator persist outlives its query).
+python3 perfbench/run.py --workload pipeline_ops --seed 1 --seconds 20 |
   python3 -c '
 import json, sys
-r = json.loads(sys.stdin.read())
+lines = [l for l in sys.stdin.read().splitlines() if l.startswith("{")]
+leaks = sorted({q["query"] for q in map(json.loads, lines)
+                if q.get("kind") == "query" and q.get("cached_left", 0) > 0})
+if leaks:
+    sys.exit("[ci.sh] perfbench pipeline_ops: cache entries left by %s" % ", ".join(leaks))
+r = json.loads(lines[-1])
 if r.get("correct") is not True or r.get("failed") != 0:
     sys.exit("[ci.sh] perfbench pipeline_ops: correct=%s failed=%s" % (r.get("correct"), r.get("failed")))
-print("[ci.sh] perfbench pipeline_ops: correct, 0 failed")'
+print("[ci.sh] perfbench pipeline_ops: correct, 0 failed, no cache entry left")'
 
 echo "== correctness vs DuckDB oracle (sf0.01)"
 rm -rf /tmp/graft_ci_vout

@@ -28,6 +28,18 @@ object Graft {
     exprs
   }
 
+  /** The value of a constant INT argument; `what` names it in the error
+    * (e.g. "simhash64 bits").
+    */
+  private def constInt(what: String)(e: Expression): Int = e match {
+    case lit if lit.foldable => lit.eval(null) match {
+      case i: Int => i
+      case other => throw new IllegalArgumentException(
+        s"$what must be a constant INT, got $other")
+    }
+    case _ => throw new IllegalArgumentException(s"$what must be a constant INT")
+  }
+
   private[graft] val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "tokenize_ja_neologd" -> (exprs => TokenizeJaNeologd(exprs)),
     "graft_hash64" -> (exprs => graft.expr.GraftHash64(arity("graft_hash64", 1)(exprs).head)),
@@ -44,29 +56,12 @@ object Graft {
       // at 63 by the expression (sign-bit safety)
       require(exprs.nonEmpty && exprs.length <= 2,
         s"Invalid number of arguments for function simhash64: expected 1 or 2, got ${exprs.length}")
-      val bits = if (exprs.length == 2) exprs(1) match {
-        case lit if lit.foldable => lit.eval(null) match {
-          case i: Int => i
-          case other => throw new IllegalArgumentException(
-            s"simhash64 bits must be a constant INT, got $other")
-        }
-        case _ => throw new IllegalArgumentException(
-          "simhash64 bits must be a constant INT")
-      } else 30
+      val bits = if (exprs.length == 2) constInt("simhash64 bits")(exprs(1)) else 30
       graft.expr.SimHash64(exprs.head, bits)
     }),
     "shingle_hashes" -> (exprs => {
       val e = arity("shingle_hashes", 2)(exprs)
-      val k = e(1) match {
-        case lit if lit.foldable => lit.eval(null) match {
-          case i: Int => i
-          case other => throw new IllegalArgumentException(
-            s"shingle_hashes k must be a constant INT, got $other")
-        }
-        case _ => throw new IllegalArgumentException(
-          "shingle_hashes k must be a constant INT")
-      }
-      graft.expr.ShingleHashes(e(0), k)
+      graft.expr.ShingleHashes(e(0), constInt("shingle_hashes k")(e(1)))
     }),
     "ac_match" -> (exprs => {
       val e = arity("ac_match", 2)(exprs)
@@ -85,16 +80,7 @@ object Graft {
     }),
     "rolling_window_hashes" -> (exprs => {
       val e = arity("rolling_window_hashes", 2)(exprs)
-      val win = e(1) match {
-        case lit if lit.foldable => lit.eval(null) match {
-          case i: Int => i
-          case other => throw new IllegalArgumentException(
-            s"rolling_window_hashes win must be a constant INT, got $other")
-        }
-        case _ => throw new IllegalArgumentException(
-          "rolling_window_hashes win must be a constant INT")
-      }
-      graft.expr.RollingWindowHashes(e(0), win)
+      graft.expr.RollingWindowHashes(e(0), constInt("rolling_window_hashes win")(e(1)))
     }),
     "l2_normalize" -> (exprs =>
       graft.expr.L2Normalize(arity("l2_normalize", 1)(exprs).head)))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for LLM-data pipelines (SURVEY.md §2-C).
   *
@@ -17,26 +16,16 @@ import org.apache.spark.storage.StorageLevel
   * scale with partition count: shingle/signature explosion is map-side,
   * candidate generation shuffles on (band, value) or shingle keys, and
   * skewed keys are handled by AQE skew-join splitting at runtime.
+  *
+  * No operator caches a frame in the session: once a result is consumed,
+  * the CacheManager holds no entry from it. Several operators read their
+  * input more than once (the two sides of a self-join, the verification
+  * join back to the shingles, both blocking passes), and every read
+  * recomputes it, so the input must be deterministic: no `rand`, `uuid`
+  * or `monotonically_increasing_id` in its plan. Where two reads plan to
+  * the same exchange, AQE's stage reuse runs it once.
   */
 object Dedup {
-
-  /** Storage level for staged intermediates, settable per workload.
-    * Default MEMORY_AND_DISK: hot at interactive scale (pure DISK_ONLY paid
-    * write+read passes even when the frame fit comfortably in memory —
-    * VERDICT r2 perf audit on q32), while memory pressure at corpus scale
-    * degrades to disk blocks instead of OOM. Batch jobs staging frames far
-    * beyond executor memory can set DISK_ONLY up front.
-    */
-  @volatile var stageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
-
-  /** Reuse point for an intermediate frame read by several downstream
-    * subtrees — persisting breaks subtree duplication across the self-join
-    * sides. The persist lives until the session ends (there is no safe
-    * point to unpersist a frame the returned plan still reads); long-lived
-    * sessions issuing many near-dup queries should
-    * `spark.catalog.clearCache()` between batches.
-    */
-  private def stage(df: DataFrame): DataFrame = df.persist(stageLevel)
 
   /** Deterministic polynomial hash constants (mirrored in DuckDB oracles). */
   final val P = 1000000007L
@@ -105,7 +94,7 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       k: Int, threshold: Double,
       maxShingleDocFreq: Int = Int.MaxValue): DataFrame = {
-    val all = stage(hashedShingles(df, idCol, textCol, k))
+    val all = hashedShingles(df, idCol, textCol, k)
     val sh =
       if (maxShingleDocFreq == Int.MaxValue) all
       else {
@@ -140,7 +129,7 @@ object Dedup {
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
       k: Int, threshold: Double): DataFrame = {
-    val sh = stage(hashedShingles(df, idCol, textCol, k))
+    val sh = hashedShingles(df, idCol, textCol, k)
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
     val a = sh.select(col("id").as("id_a"), col("h"))
     val b = sh.select(col("id").as("id_b"), col("h"))
@@ -191,15 +180,13 @@ object Dedup {
     require(num > 0 && den > 0 && num <= den, s"threshold $num/$den not in (0,1]")
     val all = df.select(col(idCol).as("id"),
       explode(array_distinct(tokens(col(textCol)))).as("tok"))
-    val kept =
+    val toks =
       if (maxTokenDocFreq == Int.MaxValue) all
       else {
         val hot = all.groupBy(col("tok")).agg(count(lit(1)).as("df"))
           .where(col("df") > maxTokenDocFreq).select(col("tok"))
         all.join(broadcast(hot), Seq("tok"), "left_anti")
       }
-    // read by the df agg, the rank join, the size agg, and verification
-    val toks = stage(kept)
     val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val rarity = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("df"), col("tok"))
@@ -260,9 +247,7 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // one materialization of the hashed shingles feeds signatures, sizes,
-    // and the verification join
-    val sh = stage(hashedShingles(df, idCol, textCol, k))
+    val sh = hashedShingles(df, idCol, textCol, k)
     val sigs = minhashFromHashed(sh, numHashes)
     def bandHash(j: Int): Column =
       (0 until r).foldLeft(lit(0L)) { (acc, i) =>
@@ -271,11 +256,8 @@ object Dedup {
     val bandStructs = array((0 until bands).map { j =>
       struct(lit(j).as("bidx"), bandHash(j).as("bval"))
     }: _*)
-    // staged: the self-join below would otherwise duplicate the whole
-    // signature-aggregation subtree (one copy per join side) — visible as
-    // two partial_min(…)×16 HashAggregates in the physical plan
-    val bandsDf = stage(sigs.select(col("id"), explode(bandStructs).as("band"))
-      .select(col("id"), col("band.bidx").as("bidx"), col("band.bval").as("bval")))
+    val bandsDf = sigs.select(col("id"), explode(bandStructs).as("band"))
+      .select(col("id"), col("band.bidx").as("bidx"), col("band.bval").as("bval"))
     val cand = bandsDf.as("x").join(bandsDf.as("y"),
         col("x.bidx") === col("y.bidx") && col("x.bval") === col("y.bval")
           && col("x.id") < col("y.id"))
@@ -712,15 +694,12 @@ object Dedup {
     // negative maxDist a trivially-empty filter); reject it loudly. The
     // q94 call site passes the fixed threshold 2.
     require(maxDist >= 0, s"fuzzyMatchBlocked: maxDist must be >= 0, got $maxDist")
-    // staged: both join sides and both passes read this subtree; without
-    // the persist the scan+projection would run four times (same rationale
-    // as the LSH signature stage above).
-    val base = stage(df.select(col(keyCol).as("fm_k"), col(strCol).as("fm_s"),
+    val base = df.select(col(keyCol).as("fm_k"), col(strCol).as("fm_s"),
       substring(col(strCol), 1, blockLen).as("fm_pre"),
-      substring(col(strCol), -blockLen, blockLen).as("fm_suf")))
+      substring(col(strCol), -blockLen, blockLen).as("fm_suf"))
     // The probe side is explicitly repartitioned on the blocking key: the
     // verify cost lives in the JOIN OUTPUT (|candidates| levenshtein DPs),
-    // which AQE's size-based coalescing cannot see — with a small persisted
+    // which AQE's size-based coalescing cannot see — with a small
     // base the broadcast-join probe side collapses to ~1 partition and all
     // ~456k DPs ran on one core (q125 at 6.8 s). The explicit key
     // repartition is also exactly the 100x-scale plan: a shuffle equi-join
@@ -789,7 +768,7 @@ object Dedup {
     require(fields.nonEmpty, "linkageScore needs at least one field")
     val cols = Seq(col(idCol).as("lk_id"), col(blockCol).as("lk_b")) ++
       fields.map { case (f, _, _) => col(f) }
-    val base = stage(df.select(cols: _*))
+    val base = df.select(cols: _*)
     val pruned =
       if (maxBlockSize == Int.MaxValue) base
       else {
@@ -829,8 +808,8 @@ object Dedup {
     */
   def semanticDedup(corpus: DataFrame, model: IvfIndex.Model,
       threshold: Double): DataFrame = {
-    val asg = stage(IvfIndex.assign(corpus, model)
-      .select(col("vec_id"), col("cid")))
+    val asg = IvfIndex.assign(corpus, model)
+      .select(col("vec_id"), col("cid"))
     val cand = asg.as("a").join(asg.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))

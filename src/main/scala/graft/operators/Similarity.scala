@@ -308,24 +308,28 @@ object Similarity {
       .where(col("embedding").isNotNull &&
         cosine_sim(col("embedding"), col("embedding")).isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seed = base.orderBy("vec_id").limit(1).collect()(0)
-    var selected = List((1, seed.getLong(0), Option.empty[Double]))
-    def centerEmb(row: org.apache.spark.sql.Row): Column =
-      typedlit(row.getSeq[Float](1))
-    var scored = base.withColumn("best",
-      coalesce(cosine_sim(col("embedding"), centerEmb(seed)), lit(-2d)))
-    var chosenIds = Set(seed.getLong(0))
-    (2 to k).foreach { i =>
-      val next = scored.where(!col("vec_id").isInCollection(chosenIds))
-        .orderBy(col("best"), col("vec_id")).limit(1).collect()(0)
-      selected ::= ((i, next.getLong(0), Some(next.getDouble(2))))
-      chosenIds += next.getLong(0)
-      scored = scored.withColumn("best",
-        greatest(col("best"),
-          coalesce(cosine_sim(col("embedding"), centerEmb(next)), lit(-2d))))
-    }
-    selected.reverse.map { case (o, id, f) => (o, id, f) }
-      .toDF("sel_order", "vec_id", "far_cos")
+    // the k collects below all read `base`; the returned local frame does
+    // not, so the persist is released before returning
+    val selected = try {
+      val seed = base.orderBy("vec_id").limit(1).collect()(0)
+      var picked = List((1, seed.getLong(0), Option.empty[Double]))
+      def centerEmb(row: org.apache.spark.sql.Row): Column =
+        typedlit(row.getSeq[Float](1))
+      var scored = base.withColumn("best",
+        coalesce(cosine_sim(col("embedding"), centerEmb(seed)), lit(-2d)))
+      var chosenIds = Set(seed.getLong(0))
+      (2 to k).foreach { i =>
+        val next = scored.where(!col("vec_id").isInCollection(chosenIds))
+          .orderBy(col("best"), col("vec_id")).limit(1).collect()(0)
+        picked ::= ((i, next.getLong(0), Some(next.getDouble(2))))
+        chosenIds += next.getLong(0)
+        scored = scored.withColumn("best",
+          greatest(col("best"),
+            coalesce(cosine_sim(col("embedding"), centerEmb(next)), lit(-2d))))
+      }
+      picked
+    } finally base.unpersist()
+    selected.reverse.toDF("sel_order", "vec_id", "far_cos")
   }
 
   /** Margin-based parallel-pair mining (Artetxe & Schwenk 2019; the
