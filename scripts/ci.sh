@@ -59,6 +59,20 @@ if r.get("correct") is not True or r.get("failed") != 0:
     sys.exit("[ci.sh] perfbench pipeline_ops: correct=%s failed=%s" % (r.get("correct"), r.get("failed")))
 print("[ci.sh] perfbench pipeline_ops: correct, 0 failed, no cache entry left")'
 
+echo "== benchmark ja_tokenize run: top-50 golden counts, golden SEARCH lines"
+# The only full-size check of the tokenizer kernel: the docs query's top-50
+# token counts against the golden counts, and the SEARCH-lines fold and its
+# golden lines against the kernel and JaGolden. Its last line is the result
+# record.
+python3 perfbench/run.py --workload ja_tokenize --seed 1 --seconds 20 |
+  python3 -c '
+import json, sys
+lines = [l for l in sys.stdin.read().splitlines() if l.startswith("{")]
+r = json.loads(lines[-1])
+if r.get("correct") is not True or r.get("failed") != 0:
+    sys.exit("[ci.sh] perfbench ja_tokenize: correct=%s failed=%s" % (r.get("correct"), r.get("failed")))
+print("[ci.sh] perfbench ja_tokenize: correct, 0 failed")'
+
 echo "== correctness vs DuckDB oracle (sf0.01)"
 rm -rf /tmp/graft_ci_vout
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_ci_vout"

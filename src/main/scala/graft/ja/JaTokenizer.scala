@@ -1,5 +1,7 @@
 package graft.ja
 
+import java.util.concurrent.atomic.AtomicReferenceArray
+
 import scala.collection.mutable.ArrayBuffer
 
 /** Tokenization mode (reference A3, KuromojiNEologdUDF.java:171–192):
@@ -70,6 +72,21 @@ final class JaTokenizer(
     if (stopTags == null) JaDictionary.defaultStopTags else stopTags.filter(_ != null)
   private val userTrie: DictTrie = if (userDict.isEmpty) null else DictTrie(userDict)
   private val dict: DictTrie = JaDictionary.embedded
+  private val searchMode = mode != JaMode.Normal
+  /** Embedded-entry word cost by entry id, in this tokenizer's mode. */
+  private val dictCost: Array[Int] = if (searchMode) dict.searchCost else dict.normalCost
+
+  /** Per-entry output memo: the T2–T7 output of emitting an entry, by entry
+    * id, filled on first emission. The output depends on the mode and the
+    * stop lists, so each tokenizer keeps its own; user-dictionary ids and
+    * embedded ids are separate id spaces, so each has its own array. One
+    * tokenizer serves many task threads: the atomic array publishes each
+    * filled slot safely, and threads that race on a slot compute equal
+    * arrays, so either write may win.
+    */
+  private val dictOut = new AtomicReferenceArray[Array[String]](dict.size)
+  private val userOut =
+    if (userTrie == null) null else new AtomicReferenceArray[Array[String]](userTrie.size)
 
   /** Test seam (JaFastPathSpec): force the full lattice even where
     * `fastSingleClass` would apply, so the shortcut's claimed equivalence to
@@ -83,9 +100,11 @@ final class JaTokenizer(
   /** Diagnostic/calibration seam: when non-null, the backtrack loop records
     * every winning-path edge as (surface, dictEntry-or-null, connection
     * class) before filtering — the raw Viterbi path, including tokens the
-    * T3/T5 stop filters later drop. Used by tools.PathDump and the
-    * corpus-transition counter (JaCostCalibration); null (the default) adds
-    * only a null check per emitted token, nothing in the relaxation loop.
+    * T3/T5 stop filters later drop. The `DictEntry` is looked up from the
+    * back-pointer's entry id only here and at emission. Used by
+    * `tools.TokDump --path` and the corpus-transition counter (JaCostTrain);
+    * null (the default) adds only a null check per emitted token, nothing
+    * in the relaxation loop.
     */
   private[graft] var pathSink: ArrayBuffer[(String, DictEntry, Int)] = null
 
@@ -128,8 +147,6 @@ final class JaTokenizer(
   private final val Inf = Int.MaxValue / 4
   private final val MaxUnknownCp = 24 // unknown-edge prefix lengths generated per position
   private final val MaxRegionChars = 4096 // lattice chunk bound (memory + cost saturation)
-
-  private val searchMode = mode != JaMode.Normal
 
   /** Single-class fast path: a region that is entirely one Latin/Digit run
     * with no dictionary surface starting anywhere inside it has exactly one
@@ -186,11 +203,15 @@ final class JaTokenizer(
     * prefixes. The cheapest path under JaCosts is backtracked and emitted
     * through the T2–T7 filter chain.
     *
-    * Hot path: lattice arrays and the match buffer come from a per-thread
-    * scratch (callers run one region at a time per task thread), dictionary
-    * entries carry precomputed costs, and the connection matrix is scanned
-    * via its flattened transpose — no allocation per region beyond token
-    * output.
+    * Hot path: the loop touches only primitive arrays. Lattice arrays, the
+    * region decode and the match buffer come from a per-thread scratch
+    * (callers run one region at a time per task thread); the region is
+    * decoded once into class, code-point width and same-class run end per
+    * offset; matches and back-pointers are entry ids into DictTrie's per-id
+    * arrays (-1 = unknown edge); the best predecessor of each (position,
+    * edge class) is found once and shared by every edge of that class; and
+    * the connection matrix is scanned via its flattened transpose — no
+    * allocation per region beyond token output.
     */
   private def segmentRegion(line: String, from: Int, end: Int,
       out: ArrayBuffer[String]): Unit = {
@@ -202,88 +223,83 @@ final class JaTokenizer(
     s.ensure(size)
     val cost = s.cost
     val bpStart = s.bpStart // region-relative start of best edge into state
-    val bpEntry = s.bpEntry // null = unknown edge
-    val bpUser = s.bpUser
+    val bpEntry = s.bpEntry // entry id; -1 = unknown edge
+    val bpUser = s.bpUser // bpEntry is a user-dictionary id
     val bpSrc = s.bpSrc // predecessor class
     java.util.Arrays.fill(cost, 0, size, Inf)
     cost(JaCosts.BOS) = 0
     val alive = s.aliveMask // bit per class with finite cost at each row
     java.util.Arrays.fill(alive, 0, L + 1, 0)
     alive(0) = 1 << JaCosts.BOS
-    val connT = JaCosts.connT
     val matches = s.matches
 
-    // relax one edge [pos, pos+len) of class `ecls` with word cost `w` —
-    // scans only the predecessor classes actually reachable at `pos`
-    def relax(pos: Int, len: Int, ecls: Int, w: Int, e: DictEntry, user: Boolean): Unit = {
-      if (pos + len > L) return // user surfaces may contain punct; never cross the region
-      val rowBase = pos * C
-      val idx = (pos + len) * C + ecls
-      val connBase = ecls * C
-      var bits = alive(pos)
-      while (bits != 0) {
-        val src = java.lang.Integer.numberOfTrailingZeros(bits)
-        bits &= bits - 1
-        val t = cost(rowBase + src) + connT(connBase + src) + w
-        if (t < cost(idx)) {
-          cost(idx) = t
-          bpStart(idx) = pos
-          bpEntry(idx) = e
-          bpUser(idx) = user
-          bpSrc(idx) = src
-          alive(pos + len) |= 1 << ecls
-        }
-      }
+    // decode once: class and code-point width at each offset, then (right
+    // to left) the end of the same-class code-point run starting there
+    val chCls = s.chCls
+    val cpW = s.cpW
+    val runEnd = s.runEnd
+    var q = 0
+    while (q < L) {
+      val cp = line.codePointAt(from + q)
+      chCls(q) = CharClasses.classOfCp(cp)
+      cpW(q) = Character.charCount(cp)
+      q += 1
+    }
+    q = L - 1
+    while (q >= 0) {
+      val nx = q + cpW(q)
+      runEnd(q) = if (nx < L && (chCls(nx) eq chCls(q))) runEnd(nx) else nx
+      q -= 1
     }
 
-    var runEnd = -1 // cached end of the current same-class run (absolute)
-    var runCls: CharClasses.CharClass = null
     var pos = 0
     while (pos < L) {
       // skip dead positions (incl. trailing-surrogate offsets)
       if (alive(pos) != 0) {
-        val abs = from + pos
+        var known = 0 // edge classes whose best predecessor at pos is computed
         var userCount = 0
         matches.clear()
         if (userTrie != null) {
-          userTrie.matchesAt(line, abs, matches)
+          userTrie.matchesAt(line, from + pos, matches)
           userCount = matches.length
         }
-        dict.matchesAt(line, abs, matches)
+        dict.matchesAt(line, from + pos, matches)
         var m = 0
         while (m < matches.length) {
-          val e = matches(m)
-          if (m < userCount) relax(pos, e.surface.length, e.cls, JaCosts.userCost(e.cpLen), e, true)
-          else relax(pos, e.surface.length, e.cls,
-            if (searchMode) e.searchCost else e.normalCost, e, false)
+          val id = matches(m)
+          val user = m < userCount
+          val t = if (user) userTrie else dict
+          val to = pos + t.len(id)
+          if (to <= L) { // user surfaces may contain punct; never cross the region
+            val ecls = t.cls(id)
+            if ((known & (1 << ecls)) == 0) { bestInto(s, pos, ecls); known |= 1 << ecls }
+            relax(s, pos, to, ecls,
+              if (user) JaCosts.userCost(t.cpLen(id)) else dictCost(id), id, user)
+          }
           m += 1
         }
         // unknown edges: every code-point prefix of the same-class run
         // (capped), plus the full run so long runs can stay whole
-        val cls = CharClasses.classOfCp(line.codePointAt(abs))
-        if (abs >= runEnd || cls != runCls) { // scan each run once, not per position
-          runCls = cls
-          runEnd = abs + Character.charCount(line.codePointAt(abs))
-          while (runEnd < end && CharClasses.classOfCp(line.codePointAt(runEnd)) == cls)
-            runEnd += Character.charCount(line.codePointAt(runEnd))
-        }
-        val ecls = if (cls == CharClasses.Digit) JaCosts.Num else JaCosts.Unknown
-        val kanji = cls == CharClasses.Kanji
-        var j = abs + Character.charCount(line.codePointAt(abs))
+        val cls = chCls(pos)
+        val ecls = if (cls eq CharClasses.Digit) JaCosts.Num else JaCosts.Unknown
+        if ((known & (1 << ecls)) == 0) bestInto(s, pos, ecls)
+        val kanji = cls eq CharClasses.Kanji
+        val re = runEnd(pos)
+        var j = pos + cpW(pos)
         var cpLen = 1
         var emit = true
         while (emit) {
           var w = JaCosts.unknownCost(cls, cpLen)
           if (searchMode) w += JaCosts.searchPenalty(kanji, cpLen)
-          relax(pos, j - abs, ecls, w, null, false)
-          if (j < runEnd) {
+          if (j <= L) relax(s, pos, j, ecls, w, -1, false)
+          if (j < re) {
             if (cpLen < MaxUnknownCp) {
-              j += Character.charCount(line.codePointAt(j))
+              j += cpW(j)
               cpLen += 1
             } else {
               // jump to the run end and emit one final whole-run edge
-              cpLen += Character.codePointCount(line, j, runEnd)
-              j = runEnd
+              cpLen += Character.codePointCount(line, from + j, from + re)
+              j = re
             }
           } else emit = false
         }
@@ -318,26 +334,84 @@ final class JaTokenizer(
     var k = path.length - 1
     while (k >= 0) {
       val idx = path(k)
-      val e = bpEntry(idx)
-      if (pathSink != null)
-        pathSink += ((line.substring(from + bpStart(idx), from + idx / C), e, idx % C))
-      if (e != null) emitEntry(e, bpUser(idx), out)
-      else {
-        val tokenEnd = from + idx / C
-        emitUnknown(line.substring(from + bpStart(idx), tokenEnd), out)
+      val id = bpEntry(idx)
+      val tokStart = from + bpStart(idx)
+      val tokEnd = from + idx / C
+      if (pathSink != null) {
+        val e = if (id < 0) null else (if (bpUser(idx)) userTrie else dict).entry(id)
+        pathSink += ((line.substring(tokStart, tokEnd), e, idx % C))
       }
+      if (id >= 0) emitEntry(id, bpUser(idx), out)
+      else emitUnknown(line.substring(tokStart, tokEnd), out)
       k -= 1
     }
   }
 
-  /** User-dictionary segmentation applies in every mode (G3: NORMAL mode
-    * still yields 日本|経済|新聞); embedded compound entries decompose only
-    * in SEARCH/EXTENDED (Kuromoji compound-decomposition penalty).
+  /** The cheapest arrival at (pos, `ecls`) before the word cost: the
+    * minimum over the classes alive at `pos` of cost + conn(src, ecls), the
+    * first class in bit order on ties (what scanning the classes per edge
+    * with a strict `<` picked). Stored in the scratch's bestCost/bestSrc.
     */
-  private def emitEntry(e: DictEntry, isUser: Boolean, out: ArrayBuffer[String]): Unit = {
+  private def bestInto(s: JaTokenizer.Scratch, pos: Int, ecls: Int): Unit = {
+    val C = JaCosts.NumClasses
+    val connT = JaCosts.connT
+    val rowBase = pos * C
+    val connBase = ecls * C
+    var bits = s.aliveMask(pos)
+    var bc = Int.MaxValue
+    var bs = -1
+    while (bits != 0) {
+      val src = java.lang.Integer.numberOfTrailingZeros(bits)
+      bits &= bits - 1
+      val t = s.cost(rowBase + src) + connT(connBase + src)
+      if (t < bc) { bc = t; bs = src }
+    }
+    s.bestCost(ecls) = bc
+    s.bestSrc(ecls) = bs
+  }
+
+  /** Relax the edge [pos, to) of class `ecls` with word cost `w` from the
+    * best predecessor that bestInto stored for `ecls` at `pos`.
+    */
+  private def relax(s: JaTokenizer.Scratch, pos: Int, to: Int, ecls: Int, w: Int,
+      id: Int, user: Boolean): Unit = {
+    val idx = to * JaCosts.NumClasses + ecls
+    val t = s.bestCost(ecls) + w
+    if (t < s.cost(idx)) {
+      s.cost(idx) = t
+      s.bpStart(idx) = pos
+      s.bpEntry(idx) = id
+      s.bpUser(idx) = user
+      s.bpSrc(idx) = s.bestSrc(ecls)
+      s.aliveMask(to) |= 1 << ecls
+    }
+  }
+
+  /** Append the memoized output of entry `id` (a user-dictionary id when
+    * `isUser`), computing it on first use.
+    */
+  private def emitEntry(id: Int, isUser: Boolean, out: ArrayBuffer[String]): Unit = {
+    val memo = if (isUser) userOut else dictOut
+    var toks = memo.getAcquire(id)
+    if (toks == null) {
+      toks = entryTokens(if (isUser) userTrie.entry(id) else dict.entry(id), isUser)
+      memo.setRelease(id, toks)
+    }
+    var k = 0
+    while (k < toks.length) { out += toks(k); k += 1 }
+  }
+
+  /** One entry's tokens after T2–T7. User-dictionary segmentation applies
+    * in every mode (G3: NORMAL mode still yields 日本|経済|新聞); embedded
+    * compound entries decompose only in SEARCH/EXTENDED (Kuromoji
+    * compound-decomposition penalty).
+    */
+  private def entryTokens(e: DictEntry, isUser: Boolean): Array[String] = {
+    val toks = new ArrayBuffer[String](2)
     val decompose = e.segments.nonEmpty && (isUser || mode != JaMode.Normal)
-    if (decompose) e.segments.foreach(seg => emitToken(seg.output, seg.pos, out))
-    else emitToken(e.output, e.pos, out)
+    if (decompose) e.segments.foreach(seg => emitToken(seg.output, seg.pos, toks))
+    else emitToken(e.output, e.pos, toks)
+    toks.toArray
   }
 
   private def emitUnknown(run: String, out: ArrayBuffer[String]): Unit = {
@@ -387,30 +461,40 @@ final class JaTokenizer(
 
 object JaTokenizer {
 
-  /** Per-thread lattice scratch: Viterbi state arrays, the trie match
-    * buffer, and the backtrack path, grown on demand and reused across
-    * regions/rows. Tokenizer instances are shared across Spark task threads
-    * (built once per executor, A8), so the scratch is thread-local rather
-    * than instance state; region chunking (MaxRegionChars) bounds the
-    * retained size at ~(4097 × 14) entries per array per thread.
+  /** Per-thread lattice scratch: Viterbi state arrays, the region decode,
+    * the per-class best predecessor, the trie match buffer and the
+    * backtrack path, grown on demand and reused across regions/rows.
+    * Tokenizer instances are shared across Spark task threads (built once
+    * per executor, A8), so the scratch is thread-local rather than instance
+    * state; region chunking (MaxRegionChars) bounds the retained size at
+    * ~(4097 × 28) entries per state array per thread.
     */
   private final class Scratch {
     var cost = new Array[Int](0)
     var bpStart = new Array[Int](0)
-    var bpEntry = new Array[DictEntry](0)
+    var bpEntry = new Array[Int](0)
     var bpUser = new Array[Boolean](0)
     var bpSrc = new Array[Int](0)
     var aliveMask = new Array[Int](0)
-    val matches = new ArrayBuffer[DictEntry](64)
-    val path = new ArrayBuffer[Int](32)
+    var chCls = new Array[CharClasses.CharClass](0)
+    var cpW = new Array[Int](0)
+    var runEnd = new Array[Int](0)
+    val bestCost = new Array[Int](JaCosts.NumClasses)
+    val bestSrc = new Array[Int](JaCosts.NumClasses)
+    val matches = new IntBuf(64)
+    val path = new IntBuf(32)
     def ensure(n: Int): Unit = if (cost.length < n) {
       val cap = math.max(n, 2048)
+      val rows = cap / JaCosts.NumClasses + 2
       cost = new Array[Int](cap)
       bpStart = new Array[Int](cap)
-      bpEntry = new Array[DictEntry](cap)
+      bpEntry = new Array[Int](cap)
       bpUser = new Array[Boolean](cap)
       bpSrc = new Array[Int](cap)
-      aliveMask = new Array[Int](cap / JaCosts.NumClasses + 2)
+      aliveMask = new Array[Int](rows)
+      chCls = new Array[CharClasses.CharClass](rows)
+      cpW = new Array[Int](rows)
+      runEnd = new Array[Int](rows)
     }
   }
 

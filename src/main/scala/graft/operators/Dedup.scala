@@ -11,11 +11,15 @@ import org.apache.spark.sql.functions._
   * Datasets ch. 3), and SimHash (Charikar 2002, "Similarity estimation
   * techniques from rounding algorithms").
   *
-  * All operators are stateless DataFrame→DataFrame transforms built from
-  * shuffle-keyed built-ins — no driver-side collect anywhere — so they
-  * scale with partition count: shingle/signature explosion is map-side,
-  * candidate generation shuffles on (band, value) or shingle keys, and
-  * skewed keys are handled by AQE skew-join splitting at runtime.
+  * The operators are stateless DataFrame→DataFrame transforms built from
+  * shuffle-keyed built-ins, so they scale with partition count:
+  * shingle/signature explosion is map-side, candidate generation shuffles
+  * on (band, value) or shingle keys, and skewed keys are handled by AQE
+  * skew-join splitting at runtime. One exception runs Spark jobs and
+  * collects to the driver while it builds its plan: `connectedComponents`
+  * checkpoints and counts its edges, collects them (and the node ids) into
+  * a driver union-find when they fit under its size bound, and otherwise
+  * runs one `isEmpty` convergence job per iteration.
   *
   * No operator caches a frame in the session: once a result is consumed,
   * the CacheManager holds no entry from it. Several operators read their
