@@ -572,6 +572,33 @@ object Kernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
   }
 
+  /** Seed order of the unigram learners: freq desc, then piece asc in UTF-8
+    * byte order — Spark's string order, where U+E000 sorts before U+1F600
+    * (String.compareTo, on UTF-16 units, puts it after).
+    */
+  val unigramSeedOrder: Ordering[(UTF8String, Long)] = new Ordering[(UTF8String, Long)] {
+    def compare(a: (UTF8String, Long), b: (UTF8String, Long)): Int = {
+      val c = java.lang.Long.compare(b._2, a._2)
+      if (c != 0) c else a._1.binaryCompare(b._1)
+    }
+  }
+
+  /** `Math.addExact` for a usage sum of operator `op`: an overflow fails
+    * with a message that names `op`, where a SQL `SUM` in ANSI mode (and
+    * the DuckDB twin's HUGEINT→BIGINT cast) would fail.
+    */
+  def usageAdd(op: String, a: Long, b: Long): Long =
+    try Math.addExact(a, b)
+    catch { case _: ArithmeticException => throw usageOverflow(op) }
+
+  /** `Math.multiplyExact` for one wc·q term of a usage sum, as [[usageAdd]]. */
+  def usageTimes(op: String, a: Long, b: Long): Long =
+    try Math.multiplyExact(a, b)
+    catch { case _: ArithmeticException => throw usageOverflow(op) }
+
+  private def usageOverflow(op: String) =
+    new ArithmeticException(s"$op: a piece's usage sum overflowed BIGINT")
+
   /** SimHash signature over the space-separated token multiset, one char
     * pass per row (no explode/aggregate): bit b of the result is set iff
     * Σ_tokens (±1 by bit b of polyHash(token)) > 0. Token boundaries follow

@@ -287,37 +287,62 @@ object UnigramSegment {
   /** 2^-84 — the smallest piece/unk probability compatible with the
     * kernel's one-boost-per-step renormalization invariant. */
   val MinProb: Double = java.lang.Math.scalb(1.0, -84)
+
+  /** The vocabulary checks of [[Kernels.unigramSegment]] (and, with
+    * `expected`, of [[Kernels.unigramExpected]]), then the piece → prob map
+    * and the longest piece in code points that the kernels run with. Every
+    * caller — both expressions and the TextAnalysis unigram learners —
+    * goes through here, so a bad model fails before any row is read, with
+    * a message that starts with `name`.
+    */
+  def vocab(name: String, pieces: Seq[String], probs: Seq[Double],
+      unkScore: Double, expected: Boolean)
+      : (java.util.HashMap[String, java.lang.Double], Int) = {
+    require(pieces.nonEmpty && pieces.length == probs.length,
+      s"$name: pieces and probs must be equal-length and non-empty")
+    require(pieces.length <= 65536,
+      s"$name: vocabulary capped at 65536 pieces (plan-embedded)")
+    require(pieces.forall(_.nonEmpty), s"$name: empty piece")
+    // the floor 2^-84 is the one-boost-per-step invariant of the kernel's
+    // power-of-two renormalization (round-19 review finding): a prob below
+    // it can drive the stored dp to exactly 0.0 despite the boost, leaving
+    // no chosen predecessor (the backtrack would read index -1). Library
+    // callers always satisfy it — probs are freq/total with BIGINT totals
+    // (>= 2^-63) and unkScore is 1/(total·10^6) (>= ~2^-83). The
+    // forward–backward spread <= 2 window bound assumes the same floor.
+    require(probs.forall(p => p >= MinProb && p <= 1.0)
+        && unkScore >= MinProb && unkScore <= 1.0,
+      s"$name: probs and unkScore must be in [2^-84, 1]")
+    val m = new java.util.HashMap[String, java.lang.Double](pieces.length * 2)
+    pieces.iterator.zip(probs.iterator).foreach { case (pc, p) =>
+      m.put(pc, java.lang.Double.valueOf(p))
+    }
+    val maxLen = pieces.iterator.map(p => p.codePointCount(0, p.length)).max
+    // Fail before the kernel runs, not per-row mid-query (ADVICE r20 #3):
+    // the forward–backward spread <= 2 invariant holds because a boost
+    // band (2^256) cannot be crossed in under ⌈256/84⌉ = 4 positions when
+    // every span multiplies by >= MinProb = 2^-84 — so across the
+    // maxLen-wide lattice window the boost moves at most ⌊(maxLen−1)/3⌋
+    // bands. ADVICE r21: that band math would in fact admit maxLen up to
+    // 9; the pin at 7 is DELIBERATE conservative headroom (one full band of
+    // margin against the crossing-count argument), not the exact
+    // invariant — a caller needing 8–9 should re-derive the window bound in
+    // Kernels.unigramExpected before loosening this.
+    require(!expected || maxLen <= 7,
+      s"$name: longest piece spans $maxLen codepoints — the " +
+        "boost-renorm window bound (spread <= 2 at probs >= 2^-84) is only " +
+        "proven for maxLen <= 7 (deliberately below the theoretical 9)")
+    (m, maxLen)
+  }
 }
 
 case class UnigramSegment(child: Expression, pieces: Seq[String],
     probs: Seq[Double], unkScore: Double)
     extends UnaryExpression {
 
-  require(pieces.nonEmpty && pieces.length == probs.length,
-    "unigram_segment: pieces and probs must be equal-length and non-empty")
-  require(pieces.length <= 65536,
-    "unigram_segment: vocabulary capped at 65536 pieces (plan-embedded)")
-  require(pieces.forall(_.nonEmpty), "unigram_segment: empty piece")
-  // the floor 2^-84 is the one-boost-per-step invariant of the kernel's
-  // power-of-two renormalization (round-19 review finding): a prob below
-  // it can drive the stored dp to exactly 0.0 despite the boost, leaving
-  // no chosen predecessor (the backtrack would read index -1). Library
-  // callers always satisfy it — probs are freq/total with BIGINT totals
-  // (>= 2^-63) and unkScore is 1/(total·10^6) (>= ~2^-83).
-  require(probs.forall(p => p >= UnigramSegment.MinProb && p <= 1.0)
-      && unkScore >= UnigramSegment.MinProb && unkScore <= 1.0,
-    s"unigram_segment: probs and unkScore must be in [2^-84, 1]")
-
-  // built once per plan, shared by eval and generated code
-  private val vocabMap: java.util.HashMap[String, java.lang.Double] = {
-    val m = new java.util.HashMap[String, java.lang.Double](pieces.length * 2)
-    pieces.iterator.zip(probs.iterator).foreach { case (pc, p) =>
-      m.put(pc, java.lang.Double.valueOf(p))
-    }
-    m
-  }
-  private val maxLen: Int = pieces.iterator
-    .map(p => p.codePointCount(0, p.length)).max
+  // checked and built once per plan, shared by eval and generated code
+  private val (vocabMap, maxLen) =
+    UnigramSegment.vocab("unigram_segment", pieces, probs, unkScore, expected = false)
 
   override def prettyName: String = "unigram_segment"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -355,42 +380,9 @@ case class UnigramExpected(child: Expression, pieces: Seq[String],
     probs: Seq[Double], unkScore: Double)
     extends UnaryExpression {
 
-  require(pieces.nonEmpty && pieces.length == probs.length,
-    "unigram_expected: pieces and probs must be equal-length and non-empty")
-  require(pieces.length <= 65536,
-    "unigram_expected: vocabulary capped at 65536 pieces (plan-embedded)")
-  require(pieces.forall(_.nonEmpty), "unigram_expected: empty piece")
-  // same floor as UnigramSegment: the one-boost renormalization invariant
-  // and the spread ≤ 2 window bound both assume probs ≥ 2^-84
-  require(probs.forall(p => p >= UnigramSegment.MinProb && p <= 1.0)
-      && unkScore >= UnigramSegment.MinProb && unkScore <= 1.0,
-    s"unigram_expected: probs and unkScore must be in [2^-84, 1]")
-
-  private val vocabMap: java.util.HashMap[String, java.lang.Double] = {
-    val m = new java.util.HashMap[String, java.lang.Double](pieces.length * 2)
-    pieces.iterator.zip(probs.iterator).foreach { case (pc, p) =>
-      m.put(pc, java.lang.Double.valueOf(p))
-    }
-    m
-  }
-  private val maxLen: Int = pieces.iterator
-    .map(p => p.codePointCount(0, p.length)).max
-  // Fail at PLAN BUILD, not per-row in the codegen kernel (ADVICE r20 #3):
-  // the kernel's spread ≤ 2 invariant holds because a boost band (2^256)
-  // cannot be crossed in under ⌈256/84⌉ = 4 positions when every span
-  // multiplies by ≥ MinProb = 2^-84 — so across the maxLen-wide lattice
-  // window the boost moves at most ⌊(maxLen−1)/3⌋ bands. maxLen ≤ 7 keeps
-  // that ≤ 2; a wider vocabulary piece must raise the renorm window bound
-  // in Kernels.unigramExpected first, not fail a job mid-query.
-  // ADVICE r21: the band math above (spread = ⌊(maxLen−1)/3⌋ ≤ 2) would in
-  // fact admit maxLen up to 9; the pin at 7 is DELIBERATE conservative
-  // headroom (one full band of margin against the crossing-count argument),
-  // not the exact invariant — a caller needing 8–9 should re-derive the
-  // window bound in Kernels.unigramExpected before loosening this.
-  require(maxLen <= 7,
-    s"unigram_expected: longest piece spans $maxLen codepoints — the " +
-      "boost-renorm window bound (spread <= 2 at probs >= 2^-84) is only " +
-      "proven for maxLen <= 7 (deliberately below the theoretical 9)")
+  // checked at PLAN BUILD, including the maxLen <= 7 window bound
+  private val (vocabMap, maxLen) =
+    UnigramSegment.vocab("unigram_expected", pieces, probs, unkScore, expected = true)
 
   override def prettyName: String = "unigram_expected"
   override def dataType: DataType = ArrayType(

@@ -241,7 +241,10 @@ object Retrieval {
     * provably bounded problem. The collect is the house bounded-collect
     * class (kLex·dims longs — smaller than the PQ codebook collects);
     * corpus-scale work (the BM25 ranking, the embedding probe join) stays
-    * distributed, and the driver never touches an unbounded frame.
+    * distributed, and the driver never touches an unbounded frame. The
+    * embeddings are semi-joined to the candidates before Quantize.int8, so
+    * quantization runs on ≤ kLex rows, not the whole table; int8 works per
+    * row, so the codes are the same.
     * Selection order, tie-breaks (doc_id asc) and the integer mmr scores
     * are replayed bit-identically — pinned by RetrievalSpec and the q141
     * oracle hash.
@@ -256,7 +259,8 @@ object Retrieval {
         logIdf = false)
       .select(col("doc_id"), col("rn").as("lex_rn"))
     val codes = graft.operators.Quantize
-      .int8(emb, "vec_id", "embedding")
+      .int8(emb.join(broadcast(lex.select(col("doc_id").as("vec_id"))), Seq("vec_id"),
+        "left_semi"), "vec_id", "embedding")
       .select(col("vec_id").as("doc_id"), col("codes"))
     val candRows = broadcast(lex).join(codes, Seq("doc_id"))
       .select(col("doc_id"), col("lex_rn"),

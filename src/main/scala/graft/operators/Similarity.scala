@@ -1,9 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
+import org.apache.spark.storage.StorageLevel
 
+import graft.expr.Kernels
 import graft.functions.cosine_sim
 
 /** Similarity search over embedding columns (array<float>), SURVEY.md §2-C.
@@ -279,57 +286,86 @@ object Similarity {
       .withColumn("margin", col("pos_cos") - col("neg_cos"))
   }
 
-  /** Gonzalez greedy k-center coreset over the embedding column.
+  /** Gonzalez greedy k-center coreset over the embedding column: the
+    * min-vec_id vector seeds, and each further center is the candidate
+    * farthest from all centers so far — the argmin by (best, vec_id), where
+    * best is its greatest cosine to a center (-2 where that cosine is null)
+    * and far_cos reports the pick's best.
     *
-    * COST SHAPE (VERDICT r14 #4 — read before raising k): the greedy is
-    * inherently sequential — each pick is ONE Spark job (a TakeOrdered(1)
-    * over the staged best-cosine frame, collecting a single row), so the
-    * operator runs exactly k sequential corpus scans. At 100 TB that is k
-    * full passes; the per-pick incremental `greatest(best, cos(·, center))`
-    * update is what keeps each pass a single projection (never a |S|-way
-    * join), but the pass count itself cannot be composed away without
-    * changing the algorithm. k is therefore capped at 512: past that, use
-    * a batched over-sampling variant (pick the 2·b farthest per pass and
-    * thin — Bahmani et al.'s k-means‖ style) — not implemented because
+    * Scale shape: the candidate rows are read once through
+    * queryExecution.toRdd and persisted for the k jobs (released before
+    * returning). Each center is ONE Spark job: the seed is a reduce to the
+    * min vec_id, and every later pick is a reduce to the argmin whose pass
+    * also folds the last pick into each row's best (persisted for the next
+    * pass, so a step is one cosine per row, never a |S|-way join). Doubles
+    * are ordered as Spark orders them (SQLOrderingUtil.compareDoubles) and
+    * cosines come from Kernels.cosine, so the picks equal the
+    * cosine_sim/greatest/orderBy formulation the oracle replays. The pick's
+    * embedding rides the reduce, so no lookup job runs and no per-step plan
+    * is built; the report is a local relation of k rows, and collecting it
+    * runs no job. The greedy is inherently sequential — k jobs are k corpus
+    * passes at 100 TB — so k is capped at 512 (VERDICT r14 #4): past that,
+    * use a batched over-sampling variant (pick the 2·b farthest per pass
+    * and thin — Bahmani et al.'s k-means‖ style), not implemented because
     * every coreset size the suite and q159 use is well under the cap.
     */
   def kCenterGreedy(corpus: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "kCenterGreedy: k must be >= 1")
     require(k <= 512,
-      s"kCenterGreedy: k = $k would run $k sequential corpus scans (one TakeOrdered " +
-      "job per center) — use a batched over-sampling variant past k = 512")
-    val spark = corpus.sparkSession
-    import spark.implicits._
+      s"kCenterGreedy: k = $k would run $k sequential corpus scans (one job " +
+      "per center) — use a batched over-sampling variant past k = 512")
     // Degenerate vectors (null / zero-norm) have null cosine to everything;
     // coalescing that to -2 would make corrupt rows the "farthest" points and
     // guarantee their selection as centers (ADVICE r13). Filter them out of
     // the candidate pool up front — the oracle applies the same gate.
-    val base = corpus.select(col("vec_id"), col("embedding"))
+    val base = corpus.select(col("vec_id").cast("long"), col("embedding"))
       .where(col("embedding").isNotNull &&
         cosine_sim(col("embedding"), col("embedding")).isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the k collects below all read `base`; the returned local frame does
-    // not, so the persist is released before returning
-    val selected = try {
-      val seed = base.orderBy("vec_id").limit(1).collect()(0)
-      var picked = List((1, seed.getLong(0), Option.empty[Double]))
-      def centerEmb(row: org.apache.spark.sql.Row): Column =
-        typedlit(row.getSeq[Float](1))
-      var scored = base.withColumn("best",
-        coalesce(cosine_sim(col("embedding"), centerEmb(seed)), lit(-2d)))
-      var chosenIds = Set(seed.getLong(0))
-      (2 to k).foreach { i =>
-        val next = scored.where(!col("vec_id").isInCollection(chosenIds))
-          .orderBy(col("best"), col("vec_id")).limit(1).collect()(0)
-        picked ::= ((i, next.getLong(0), Some(next.getDouble(2))))
-        chosenIds += next.getLong(0)
-        scored = scored.withColumn("best",
-          greatest(col("best"),
-            coalesce(cosine_sim(col("embedding"), centerEmb(next)), lit(-2d))))
+    val float = base.schema("embedding").dataType
+      .asInstanceOf[ArrayType].elementType == FloatType
+    type Cand = (Long, ArrayData, Double)
+    // (id, embedding, best); best starts below every cosine and -2
+    val rows: RDD[Cand] = base.queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getArray(1).copy(), Double.NegativeInfinity))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // null is each fold's identity (an empty partition)
+    val minId: (Cand, Cand) => Cand = (a, b) =>
+      if (a == null || (b != null && b._1 < a._1)) b else a
+    val farthest: (Cand, Cand) => Cand = (a, b) =>
+      if (a == null) b else if (b == null) a else {
+        val c = SQLOrderingUtil.compareDoubles(a._3, b._3)
+        if (c < 0 || (c == 0 && a._1 <= b._1)) a else b
       }
-      picked
-    } finally base.unpersist()
-    selected.reverse.toDF("sel_order", "vec_id", "far_cos")
+    def none(i: Int) = new IllegalArgumentException(
+      s"kCenterGreedy: k = $k but only ${i - 1} candidate vectors (non-null, non-zero norm)")
+    var scored = rows
+    val picks = try {
+      var pick = rows.fold(null)(minId)
+      if (pick == null) throw none(1)
+      val out = scala.collection.mutable.ArrayBuffer(Row(1, pick._1, null))
+      var chosen = Set(pick._1)
+      (2 to k).foreach { i =>
+        val center = pick._2
+        val prev = scored
+        scored = prev.map { case (id, e, best) =>
+          val cos = Kernels.cosine(e, center, float, float)
+          val x = if (cos == null) -2.0 else cos.doubleValue
+          (id, e, if (SQLOrderingUtil.compareDoubles(x, best) > 0) x else best)
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+        val taken = chosen
+        pick = scored.filter(r => !taken.contains(r._1)).fold(null)(farthest)
+        if (prev ne rows) prev.unpersist()
+        if (pick == null) throw none(i)
+        out += Row(i, pick._1, pick._3)
+        chosen += pick._1
+      }
+      out.toSeq
+    } finally {
+      scored.unpersist()
+      rows.unpersist()
+    }
+    corpus.sparkSession.createDataFrame(picks.asJava,
+      StructType.fromDDL("sel_order INT NOT NULL, vec_id BIGINT NOT NULL, far_cos DOUBLE"))
   }
 
   /** Margin-based parallel-pair mining (Artetxe & Schwenk 2019; the

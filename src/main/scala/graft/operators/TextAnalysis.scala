@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.expr.Kernels
 
 /** Text-analysis operators for training-data curation (SURVEY.md §2-C):
   * quality scoring, language ID, token statistics, fingerprinting, TF-IDF,
@@ -1618,16 +1625,10 @@ object TextAnalysis {
     * the synthetic corpus is ASCII so Spark and DuckDB substr agree
     * (documented caveat for astral-plane text in the oracle).
     */
-  def bpeMerges(df: DataFrame, textCol: String, steps: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    // Rows under an explicit schema: no reflective tuple encoder per call
-    val schema = StructType(Seq(StructField("step", IntegerType, nullable = false),
-      StructField("left", StringType), StructField("right", StringType),
-      StructField("merged", StringType), StructField("pair_count", LongType, nullable = false)))
-    df.sparkSession.createDataFrame(bpeCore(df, textCol, steps)._1
-      .map(m => org.apache.spark.sql.Row(m._1, m._2, m._3, m._4, m._5)).asJava, schema)
-  }
+  def bpeMerges(df: DataFrame, textCol: String, steps: Int): DataFrame =
+    localRelation(df, "step INT NOT NULL, `left` STRING, `right` STRING, merged STRING, " +
+        "pair_count BIGINT NOT NULL",
+      bpeCore(df, textCol, steps)._1.map(m => Row(m._1, m._2, m._3, m._4, m._5)))
 
   /** Corpus token frequencies AFTER `steps` BPE merges — the segmentation
     * apply step for free: each distinct word of the learner's word-count
@@ -1723,27 +1724,29 @@ object TextAnalysis {
     * OTHER major subword algorithm beside BPE; T5/mT5/Llama-family
     * vocabularies are trained this way): seed a candidate vocabulary from
     * raw substring frequencies (every single codepoint up to the
-    * 65536-piece plan-embed bound — Kudo's totality requirement, with the
+    * 65536-piece vocabulary bound — Kudo's totality requirement, with the
     * tail beyond the cap served by the decoder's single-codepoint unk
     * fallback — plus the topV most frequent multi-codepoint substrings
     * up to maxPieceLen), assign each piece the empirical probability
     * freq/total, Viterbi-segment the corpus under that model
-    * (graft.expr.UnigramSegment — the hard-EM E-step), and report each
+    * (Kernels.unigramSegment — the hard-EM E-step), and report each
     * piece's corpus usage with the prune signal (Kudo §3.2 discards
     * pieces whose removal costs nothing; a seeded piece the Viterbi path
     * never uses is exactly that). Iterating the loop re-seeds probs from
-    * usage — the documented upgrade path; one E-step keeps the whole
-    * operator on the exact-hash oracle gate (the DuckDB twin replays the
-    * DP with a recursive CTE).
+    * usage — [[unigramLmEm]] and [[unigramLmTrain]]; one E-step keeps the
+    * whole operator on the exact-hash oracle gate (the DuckDB twin replays
+    * the DP with a recursive CTE).
     *
-    * Scale shape: word counting and substring seeding are token-keyed
-    * shuffles over the DISTINCT-words frame (corpus-vocabulary-sized, not
-    * corpus-sized — each word is segmented once and weighted by its
-    * count, never once per occurrence); the multi-piece top-V is a
-    * TakeOrdered; the vocabulary collect is bounded (alphabet + topV, the
-    * k-means/IVF driver-state class) and rides the plan as ONE reference
-    * object; the Viterbi apply is a zero-shuffle codegen projection with
-    * O(len · maxPieceLen) hash probes per word.
+    * Scale shape (all five unigram learners): ONE corpus scan counts the
+    * distinct words — the only corpus-sized shuffle, localCheckpointed
+    * once — and every later step is ONE Spark job over those
+    * vocabulary-sized (word, wc) rows, weighting each word by its count
+    * (never once per occurrence): the seed is one job (substrings summed by
+    * reduceByKey, a top-K per partition merged on the driver), and each
+    * E-step is one job that runs the segmentation kernel on every word and
+    * sums usage per piece. No per-step plan is built. The report is a local
+    * relation of |vocab| rows (alphabet cap + topV): collecting it runs no
+    * job.
     *
     * Output: piece, freq (seed), p (= freq/total, one double division),
     * is_char, usage (Viterbi-path occurrences, weighted by word count),
@@ -1751,75 +1754,23 @@ object TextAnalysis {
     */
   def unigramLmVocab(df: DataFrame, textCol: String,
       maxPieceLen: Int = 4, topV: Int = 48): DataFrame = {
-    require(maxPieceLen >= 2 && topV >= 1,
-      s"unigramLmVocab: need maxPieceLen >= 2 and topV >= 1, got $maxPieceLen/$topV")
-    // topV ≥ 65536 would turn the character-seed cap 65536 − topV negative
-    // (an opaque AnalysisException at plan build) and values close to it
-    // starve the character backbone the DP's totality rests on (ADVICE r19)
-    require(topV <= 61440,
-      s"unigramLmVocab: topV capped at 61440 (the 65536 plan-embed bound minus a 4096-codepoint character-backbone reservation), got $topV")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // the distinct-words frame feeds BOTH the seeding collect and the
-    // usage job — localCheckpoint so the corpus explode + token-keyed
-    // shuffle runs once, not twice (the bpeCore precedent; the frame is
-    // vocabulary-sized, cheap to hold)
-    val words = df.select(explode(toks(col(textCol))).as("word"))
-      .where(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("wc"))
-      .localCheckpoint()
-    val subs = words.select(col("word"), col("wc"),
-      explode(flatten(transform(
-        sequence(lit(1), length(col("word"))),
-        i => transform(
-          sequence(lit(1), least(lit(maxPieceLen), length(col("word")) - i + 1)),
-          l => col("word").substr(i, l))))).as("piece"))
-    val pf = subs.groupBy("piece").agg(sum(col("wc")).as("freq"))
-    // the alphabet seed is CAPPED at the UnigramSegment plan-embed bound
-    // (ADVICE r18): a full multilingual codepoint inventory (CJK
-    // extensions + symbols + emoji) can exceed 65536 distinct
-    // codepoints, which would make the decode expression throw at plan
-    // build despite the advertised any-corpus scale shape. Keeping the
-    // top-(65536 − topV) codepoints by frequency routes the long tail
-    // through the kernel's single-codepoint unk fallback (which already
-    // exists exactly for out-of-vocab codepoints), so the DP stays
-    // total. The cap never binds at oracle scale, so the DuckDB replay
-    // (which seeds every codepoint) is unaffected where it runs.
-    val chars = pf.where(length(col("piece")) === 1)
-      .orderBy(col("freq").desc, col("piece")).limit(65536 - topV)
-    val multi = pf.where(length(col("piece")) >= 2)
-      .orderBy(col("freq").desc, col("piece")).limit(topV)
-    // bounded collect: min(|alphabet|, 65536 − topV) + topV rows (the
-    // IVF-fit class); the vocabulary must ride the plan as a literal for
-    // the codegen decode
-    val vocabRows = chars.union(multi)
-      .select(col("piece"), col("freq")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    if (vocabRows.isEmpty)
-      return Seq.empty[(String, Long, Double, Boolean, Long, Boolean)]
-        .toDF("piece", "freq", "p", "is_char", "usage", "keep")
-    val total = vocabRows.map(_._2).sum
-    val pieces = vocabRows.map(_._1).toIndexedSeq
-    val probs = vocabRows.map(_._2.toDouble / total.toDouble).toIndexedSeq
-    val unk = 1.0 / (total.toDouble * 1000000.0)
-    val usage = words
-      .select(col("wc"), explode(graft.functions.unigram_segment(
-        col("word"), pieces, probs, unk)).as("piece"))
-      .groupBy("piece").agg(sum(col("wc")).as("usage"))
-    val vocabDf = spark.createDataFrame(vocabRows.toSeq).toDF("piece", "freq")
-    vocabDf.join(usage, Seq("piece"), "left")
-      .select(col("piece"), col("freq"),
-        (col("freq").cast("double") / lit(total.toDouble)).as("p"),
-        (length(col("piece")) === 1).as("is_char"),
-        coalesce(col("usage"), lit(0L)).as("usage"))
-      .withColumn("keep", col("is_char") || col("usage") > 0)
+    val op = "unigramLmVocab"
+    val (words, seed) = unigramSeed(op, df, textCol, maxPieceLen, topV, "topV")
+    val usage = unigramUsage(op, words, seed, hard = true, soft = false)
+    val total = seed.map(_._2).sum
+    localRelation(df, "piece STRING NOT NULL, freq BIGINT NOT NULL, p DOUBLE NOT NULL, " +
+        "is_char BOOLEAN NOT NULL, usage BIGINT NOT NULL, keep BOOLEAN NOT NULL",
+      seed.map { case (p, f) =>
+        val u = usage.get(p).fold(0L)(_._1)
+        Row(p, f, f.toDouble / total.toDouble, isChar(p), u, isChar(p) || u > 0)
+      })
   }
 
   /** Kudo 2018 §3.2's TRUE E-step — soft EM (VERDICT r19 #2): where
     * [[unigramLmVocab]] counts pieces on the single Viterbi path (hard EM,
     * a documented approximation), this computes EXPECTED piece counts via
     * forward–backward over the full segmentation lattice
-    * (graft.expr.UnigramExpected) and re-estimates the model from them.
+    * (Kernels.unigramExpected) and re-estimates the model from them.
     * The output reports BOTH counts side by side — the divergence surface:
     * a piece on a near-tied alternative segmentation gets usage_hard = 0
     * but usage_soft_q > 0, and the soft M-step keeps it where hard-EM
@@ -1830,18 +1781,17 @@ object TextAnalysis {
     * [[unigramLmVocab]] renormalization discipline extended to sums —
     * no transcendentals, so cross-engine bit-equality carries over), and
     * every posterior is quantized to an INTEGER q = ⌊eq·2^24⌋ before it
-    * leaves its row, so the corpus rollup Σ wc·q is order-independent and
-    * the driver's exact-hash gate holds. The re-estimated p2 is then one
-    * double division of identical integers per piece. See
+    * leaves its word, so the corpus rollup Σ wc·q is order-independent and
+    * the driver's exact-hash gate holds. The rollup multiplies and adds
+    * with Math.multiplyExact/addExact: it is exact up to Long.MaxValue and
+    * fails with an error naming this operator past it — exactly where the
+    * DuckDB twin's HUGEINT→BIGINT cast fails. The re-estimated p2 is then
+    * one double division of identical integers per piece. See
     * [[graft.expr.Kernels.unigramExpected]] for the proof obligations.
     *
-    * Scale shape: identical to unigramLmVocab — word counting is one
-    * token-keyed shuffle over the DISTINCT-words frame (checkpointed once,
-    * feeding both E-steps), the vocabulary collect is bounded (alphabet
-    * cap + topV) and rides the plan as one reference object, and BOTH
-    * E-steps (Viterbi and forward–backward) are zero-shuffle codegen
-    * projections, O(len · maxPieceLen) hash probes per word. The M-step
-    * total is a one-row aggregate crossJoined back — no second collect.
+    * Scale shape: the [[unigramLmVocab]] shape with both E-steps (Viterbi
+    * and forward–backward) in ONE job over the word counts; the M-step
+    * total is summed on the driver over the |vocab| report rows.
     *
     * Output: piece, freq (seed), is_char, usage_hard (Viterbi-path count,
     * wc-weighted), usage_soft_q (Σ wc·q — expected count in 2^-24 units),
@@ -1851,93 +1801,23 @@ object TextAnalysis {
     */
   def unigramLmSoftEm(df: DataFrame, textCol: String,
       maxPieceLen: Int = 4, topV: Int = 48): DataFrame = {
-    require(maxPieceLen >= 2 && topV >= 1,
-      s"unigramLmSoftEm: need maxPieceLen >= 2 and topV >= 1, got $maxPieceLen/$topV")
-    require(topV <= 61440,
-      s"unigramLmSoftEm: topV capped at 61440 (the 65536 plan-embed bound minus a 4096-codepoint character-backbone reservation), got $topV")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val words = df.select(explode(toks(col(textCol))).as("word"))
-      .where(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("wc"))
-      .localCheckpoint()
-    val subs = words.select(col("word"), col("wc"),
-      explode(flatten(transform(
-        sequence(lit(1), length(col("word"))),
-        i => transform(
-          sequence(lit(1), least(lit(maxPieceLen), length(col("word")) - i + 1)),
-          l => col("word").substr(i, l))))).as("piece"))
-    val pf = subs.groupBy("piece").agg(sum(col("wc")).as("freq"))
-    // alphabet capped at the plan-embed bound, tail → unk fallback (the
-    // unigramLmVocab cap rationale; never binds at oracle scale)
-    val vocabRows = pf.where(length(col("piece")) === 1)
-      .orderBy(col("freq").desc, col("piece")).limit(65536 - topV)
-      .union(pf.where(length(col("piece")) >= 2)
-        .orderBy(col("freq").desc, col("piece")).limit(topV))
-      .select(col("piece"), col("freq")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    if (vocabRows.isEmpty)
-      return Seq.empty[(String, Long, Boolean, Long, Long, Boolean, Option[Double])]
-        .toDF("piece", "freq", "is_char", "usage_hard", "usage_soft_q", "pruned", "p2")
-    val total = vocabRows.map(_._2).sum
-    val pieces = vocabRows.map(_._1).toIndexedSeq
-    val probs = vocabRows.map(_._2.toDouble / total.toDouble).toIndexedSeq
-    val unk = 1.0 / (total.toDouble * 1000000.0)
-    val usageHard = words
-      .select(col("wc"), explode(graft.functions.unigram_segment(
-        col("word"), pieces, probs, unk)).as("piece"))
-      .groupBy("piece").agg(sum(col("wc")).as("usage_hard"))
-    // Σ wc·q split into two overflow-free LONG sums (r22; measured fix for
-    // the r21 DECIMAL(38,0) rollup): sum over decimal(38,0) cannot use the
-    // fast fixed-width hash-aggregate path (precision > 18 is not a
-    // mutable UnsafeRow field), and in a long-lived session the fallback
-    // made q234 0.78 → 5.15 s and inflated q218/q231. The split keeps the
-    // EXACT loud-overflow contract (ADVICE r20 #2): with q ≤ 2^24 per row
-    // (per-occurrence posterior ≤ 1, Kernels.unigramExpected), qhi =
-    // q div 4096 ≤ 2^12 and qlo = q % 4096 < 2^12, so both partial sums
-    // are ≤ 2^13·Σwc — provably wrap-free while Σwc < 2^49 (the loud
-    // envelope guard below, ~50× beyond the documented ~10^13-token
-    // envelope). The total 4096·Σhi + Σlo is reassembled in DECIMAL per
-    // OUTPUT row (vocab-sized, not corpus-sized) and fails loudly past
-    // BIGINT exactly where the DuckDB twin's HUGEINT→BIGINT cast does.
-    val usageSoft = words
-      .select(col("wc"), explode(graft.functions.unigram_expected(
-        col("word"), pieces, probs, unk)).as("e"))
-      .select(col("wc"), col("e.piece").as("piece"), col("e.q").as("q"))
-      .groupBy("piece")
-      .agg(sum(col("wc") * expr("q div 4096")).as("__ushi"),
-        sum(col("wc") * (col("q") % 4096)).as("__uslo"),
-        sum(col("wc")).as("__usw"))
-      .select(col("piece"), {
-        val tot = col("__ushi").cast("decimal(38,0)") * lit(4096L) + col("__uslo")
-        when(col("__usw") >= lit(562949953421312L), // 2^49
-          raise_error(lit("unigramLmSoftEm: usage_soft_q partial-sum " +
-            "envelope exceeded — corpus beyond the documented " +
-            "~10^13-token envelope")).cast("long"))
-          .when(tot.cast("long").isNotNull, tot.cast("long"))
-          .otherwise(raise_error(lit(
-            "unigramLmSoftEm: usage_soft_q overflowed BIGINT — corpus beyond the documented ~10^12-token envelope")).cast("long"))
-          .as("usage_soft_q")
+    val op = "unigramLmSoftEm"
+    val (words, seed) = unigramSeed(op, df, textCol, maxPieceLen, topV, "topV")
+    val usage = unigramUsage(op, words, seed, hard = true, soft = true)
+    // the soft M-step weight: expected mass + the 2^24 (= one occurrence
+    // in q units) character-backbone smoothing, the unigramLmEm +1 rule
+    val rows = seed.map { case (p, f) =>
+      val (hard, softQ) = usage.getOrElse(p, (0L, 0L))
+      (p, f, hard, softQ, Kernels.usageAdd(op, softQ, if (isChar(p)) 16777216L else 0L))
+    }
+    val tot2 = rows.iterator.map(_._5).foldLeft(0L)(Kernels.usageAdd(op, _, _))
+    localRelation(df, "piece STRING NOT NULL, freq BIGINT NOT NULL, is_char BOOLEAN NOT NULL, " +
+        "usage_hard BIGINT NOT NULL, usage_soft_q BIGINT NOT NULL, pruned BOOLEAN NOT NULL, p2 DOUBLE",
+      rows.map { case (p, f, hard, softQ, w2) =>
+        val pruned = !isChar(p) && softQ == 0
+        Row(p, f, isChar(p), hard, softQ, pruned,
+          if (pruned) null else w2.toDouble / tot2.toDouble)
       })
-    val base = spark.createDataFrame(vocabRows.toSeq).toDF("piece", "freq")
-      .join(broadcast(usageHard), Seq("piece"), "left")
-      .join(broadcast(usageSoft), Seq("piece"), "left")
-      .select(col("piece"), col("freq"),
-        (length(col("piece")) === 1).as("is_char"),
-        coalesce(col("usage_hard"), lit(0L)).as("usage_hard"),
-        coalesce(col("usage_soft_q"), lit(0L)).as("usage_soft_q"))
-      // the soft M-step weight: expected mass + the 2^24 (= one occurrence
-      // in q units) character-backbone smoothing, the unigramLmEm +1 rule
-      .withColumn("w2", col("usage_soft_q")
-        + when(col("is_char"), lit(16777216L)).otherwise(lit(0L)))
-    val tot2 = base.where(col("w2") > 0)
-      .agg(sum(col("w2")).as("tot2"))
-    base.crossJoin(broadcast(tot2))
-      .select(col("piece"), col("freq"), col("is_char"),
-        col("usage_hard"), col("usage_soft_q"),
-        (!col("is_char") && col("usage_soft_q") === 0).as("pruned"),
-        when(!col("is_char") && col("usage_soft_q") === 0, lit(null).cast("double"))
-          .otherwise(col("w2").cast("double") / col("tot2").cast("double")).as("p2"))
   }
 
   /** The iterated half of [[unigramLmVocab]] — one full hard-EM cycle of
@@ -1951,80 +1831,29 @@ object TextAnalysis {
     * new model. The report shows the loop working: seed freq, pass-1
     * usage, the prune verdict, the re-estimated p2, and pass-2 usage.
     *
-    * Scale shape: identical to unigramLmVocab plus ONE more bounded
-    * driver collect (pass-1 usage, ≤ |vocab| rows — segmentation pieces
-    * are always vocab members since every corpus codepoint is seeded) and
-    * ONE more zero-shuffle codegen segmentation pass over the
-    * checkpointed distinct-words frame. The oracle replays BOTH Viterbi
-    * passes (two recursive-CTE DP/backtrack pairs over the two embedded
-    * models).
+    * Scale shape: the [[unigramLmVocab]] shape plus ONE more E-step job
+    * over the word counts; the re-estimation between the passes runs on
+    * the driver over the ≤ |vocab| pass-1 usages. The oracle replays BOTH
+    * Viterbi passes (two recursive-CTE DP/backtrack pairs over the two
+    * embedded models).
     */
   def unigramLmEm(df: DataFrame, textCol: String,
       maxPieceLen: Int = 4, topV: Int = 48): DataFrame = {
-    require(maxPieceLen >= 2 && topV >= 1,
-      s"unigramLmEm: need maxPieceLen >= 2 and topV >= 1, got $maxPieceLen/$topV")
-    require(topV <= 61440,
-      s"unigramLmEm: topV capped at 61440 (the 65536 plan-embed bound minus a 4096-codepoint character-backbone reservation), got $topV")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val words = df.select(explode(toks(col(textCol))).as("word"))
-      .where(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("wc"))
-      .localCheckpoint()
-    val subs = words.select(col("word"), col("wc"),
-      explode(flatten(transform(
-        sequence(lit(1), length(col("word"))),
-        i => transform(
-          sequence(lit(1), least(lit(maxPieceLen), length(col("word")) - i + 1)),
-          l => col("word").substr(i, l))))).as("piece"))
-    val pf = subs.groupBy("piece").agg(sum(col("wc")).as("freq"))
-    // alphabet capped at the plan-embed bound, tail → unk fallback (the
-    // unigramLmVocab cap rationale; never binds at oracle scale)
-    val vocabRows = pf.where(length(col("piece")) === 1)
-      .orderBy(col("freq").desc, col("piece")).limit(65536 - topV)
-      .union(pf.where(length(col("piece")) >= 2)
-        .orderBy(col("freq").desc, col("piece")).limit(topV))
-      .select(col("piece"), col("freq")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    if (vocabRows.isEmpty)
-      return Seq.empty[(String, Long, Long, Boolean, Option[Double], Long)]
-        .toDF("piece", "freq", "usage_1", "pruned", "p2", "usage_2")
-    val total1 = vocabRows.map(_._2).sum
-    val pieces1 = vocabRows.map(_._1).toIndexedSeq
-    val probs1 = vocabRows.map(_._2.toDouble / total1.toDouble).toIndexedSeq
-    // checkpointed: the pass-1 usage frame feeds BOTH the re-estimation
-    // collect and the final report join — one segmentation pass, not two
-    val seg1 = words.select(col("wc"),
-        explode(graft.functions.unigram_segment(col("word"), pieces1, probs1,
-          1.0 / (total1.toDouble * 1000000.0))).as("piece"))
-      .groupBy("piece").agg(sum(col("wc")).as("usage_1"))
-      .localCheckpoint()
-    // bounded collect #2: pass-1 usage is keyed by vocab pieces only
-    val usage1 = seg1.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    def isChar(p: String) = p.codePointCount(0, p.length) == 1
-    val kept = vocabRows
-      .map { case (p, f) =>
-        (p, f, usage1.getOrElse(p, 0L) + (if (isChar(p)) 1L else 0L)) }
-      .filter(_._3 > 0)
-    val total2 = kept.map(_._3).sum
-    val pieces2 = kept.map(_._1).toIndexedSeq
-    val probs2 = kept.map(_._3.toDouble / total2.toDouble).toIndexedSeq
-    val usage2 = words.select(col("wc"),
-        explode(graft.functions.unigram_segment(col("word"), pieces2, probs2,
-          1.0 / (total2.toDouble * 1000000.0))).as("piece"))
-      .groupBy("piece").agg(sum(col("wc")).as("usage_2"))
-    val keptDf = broadcast(spark.createDataFrame(
-      kept.map { case (p, _, w) => (p, w.toDouble / total2.toDouble) }.toSeq)
-      .toDF("piece", "p2"))
-    spark.createDataFrame(vocabRows.toSeq).toDF("piece", "freq")
-      .join(broadcast(seg1.withColumnRenamed("usage_1", "__u1")), Seq("piece"), "left")
-      .join(keptDf, Seq("piece"), "left")
-      .join(broadcast(usage2.withColumnRenamed("usage_2", "__u2")), Seq("piece"), "left")
-      .select(col("piece"), col("freq"),
-        coalesce(col("__u1"), lit(0L)).as("usage_1"),
-        col("p2").isNull.as("pruned"),
-        col("p2"),
-        coalesce(col("__u2"), lit(0L)).as("usage_2"))
+    val op = "unigramLmEm"
+    val (words, seed) = unigramSeed(op, df, textCol, maxPieceLen, topV, "topV")
+    val usage1 = unigramUsage(op, words, seed, hard = true, soft = false)
+    def u1(p: String) = usage1.get(p).fold(0L)(_._1)
+    val kept = seed.map { case (p, _) => (p, u1(p) + (if (isChar(p)) 1L else 0L)) }
+      .filter(_._2 > 0)
+    val usage2 = unigramUsage(op, words, kept, hard = true, soft = false)
+    val (pieces2, probs2, _) = modelProbs(kept)
+    val p2 = pieces2.iterator.zip(probs2.iterator).toMap
+    localRelation(df, "piece STRING NOT NULL, freq BIGINT NOT NULL, usage_1 BIGINT NOT NULL, " +
+        "pruned BOOLEAN NOT NULL, p2 DOUBLE, usage_2 BIGINT NOT NULL",
+      seed.map { case (p, f) =>
+        Row(p, f, u1(p), !p2.contains(p), p2.getOrElse(p, null),
+          usage2.get(p).fold(0L)(_._1))
+      })
   }
 
   /** The prune schedule [[unigramLmTrain]] iterates: multi-piece keep
@@ -2055,19 +1884,19 @@ object TextAnalysis {
     * re-estimate probabilities, until the multi-piece vocabulary reaches
     * targetV; one final Viterbi pass under the target model reports final
     * usage. Pruning keeps the top schedule-count multi-pieces by
-    * (usage DESC, piece ASC) among those with usage > 0 — a round can
-    * undershoot its schedule slot when fewer pieces were used at all
-    * (vocabulary shrinkage is monotone either way); characters are never
-    * pruned and carry the +1 backbone weight (Kudo never drops the
-    * totality alphabet).
+    * (usage DESC, piece ASC in UTF-8 byte order) among those with
+    * usage > 0 — a round can undershoot its schedule slot when fewer
+    * pieces were used at all (vocabulary shrinkage is monotone either
+    * way); characters are never pruned and carry the +1 backbone weight
+    * (Kudo never drops the totality alphabet).
     *
-    * Scale shape: per iteration, ONE zero-shuffle codegen segmentation
-    * pass over the checkpointed distinct-words frame plus ONE bounded
-    * (≤ |vocab|-row) usage collect — the q220 per-iteration shape in a
-    * loop; the iteration count is fixed by the schedule
-    * (ceil(log(targetV/seedV)/log(1−pruneFrac)) rounds), independent of
-    * corpus size. The oracle replays every pass: schedule length + 1
-    * recursive-CTE DP/backtrack pairs over the embedded models.
+    * Scale shape: the [[unigramLmVocab]] shape with one E-step job per
+    * schedule round plus one for the final model — the iteration count is
+    * fixed by the schedule (ceil(log(targetV/seedV)/log(1−pruneFrac))
+    * rounds), independent of corpus size; pruning and re-estimation run on
+    * the driver over ≤ |vocab| usages. The oracle replays every pass:
+    * schedule length + 1 recursive-CTE DP/backtrack pairs over the
+    * embedded models.
     *
     * Output per seeded piece: piece, freq (seed), is_char,
     * rounds_survived (prune rounds outlived: 0 = cut at the first prune,
@@ -2075,19 +1904,57 @@ object TextAnalysis {
     * final_p (null once pruned), final_usage (usage under the final
     * model).
     */
-  /** Unsigned lexicographic UTF-8 byte comparison — the order Spark's
-    * UTF8String and DuckDB use for strings. */
-  private def utf8Less(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
+  def unigramLmTrain(df: DataFrame, textCol: String, maxPieceLen: Int = 4,
+      seedV: Int = 96, targetV: Int = 24, pruneFrac: Double = 0.5): DataFrame =
+    unigramTrainReport("unigramLmTrain", df, textCol, maxPieceLen, seedV, targetV,
+      pruneFrac, soft = false)
+
+  /** The FULL Kudo 2018 §3.2 loop with the TRUE (soft-EM) E-step — the
+    * [[unigramLmTrain]] schedule driven by forward–backward EXPECTED
+    * counts instead of Viterbi-path counts (the q231 E-step inside the
+    * q223 loop, completing VERDICT r19 #2): per round, usage is the
+    * integer-quantized posterior mass Σ wc·⌊eq·2^24⌋, pruning keeps the
+    * top-scheduled multi-pieces by (expected mass DESC, piece UTF-8 ASC),
+    * and re-estimation weights are the quantized masses with the
+    * character backbone smoothed by 2^24 (= one occurrence in q units).
+    * The loop's behavioral difference from hard EM is exactly the q231
+    * divergence surface, compounded: a near-tied piece the Viterbi path
+    * never uses carries zero hard usage and dies in round 1, while its
+    * lattice mass keeps it alive here (UnigramSoftEmSpec pins a corpus
+    * where the two loops ship DIFFERENT final vocabularies).
+    *
+    * Scale shape: the [[unigramLmTrain]] shape — one word count, one seed
+    * job, one soft E-step job per round plus one for the final model, a
+    * local-relation report; the usage sums are the exact [[unigramLmSoftEm]]
+    * rollup.
+    *
+    * Output mirrors unigramLmTrain with final_usage in q units:
+    * piece, freq, is_char, rounds_survived, final_p, final_usage_q.
+    */
+  def unigramLmTrainSoft(df: DataFrame, textCol: String, maxPieceLen: Int = 4,
+      seedV: Int = 96, targetV: Int = 24, pruneFrac: Double = 0.5): DataFrame =
+    unigramTrainReport("unigramLmTrainSoft", df, textCol, maxPieceLen, seedV, targetV,
+      pruneFrac, soft = true)
+
+  private def unigramTrainReport(op: String, df: DataFrame, textCol: String,
+      maxPieceLen: Int, seedV: Int, targetV: Int, pruneFrac: Double,
+      soft: Boolean): DataFrame = {
+    val rows = unigramTrainCore(op, df, textCol, maxPieceLen, seedV, targetV, pruneFrac, soft)
+      .fold(Array.empty[Row]) { t =>
+        // final_p comes from the SAME modelProbs arithmetic the decode
+        // kernel ran with — not a second hand-rolled normalization
+        // (round-19 review finding: the report must show the exact
+        // doubles the segmentation used)
+        val (pieces, probs, _) = modelProbs(t.model)
+        val finalP = pieces.iterator.zip(probs.iterator).toMap
+        t.seedRows.map { case (p, f) =>
+          Row(p, f, isChar(p), t.survivedRounds(p), finalP.getOrElse(p, null),
+            t.finalUsage.getOrElse(p, 0L))
+        }
+      }
+    localRelation(df, "piece STRING NOT NULL, freq BIGINT NOT NULL, is_char BOOLEAN NOT NULL, " +
+        "rounds_survived INT NOT NULL, final_p DOUBLE, " +
+        s"${if (soft) "final_usage_q" else "final_usage"} BIGINT NOT NULL", rows)
   }
 
   /** Trained state shared by [[unigramLmTrain]] (the per-piece report) and
@@ -2099,78 +1966,19 @@ object TextAnalysis {
       model: Array[(String, Long)],
       finalUsage: Map[String, Long])
 
-  /** The [[unigramLmTrain]] loop body — one zero-shuffle codegen Viterbi
-    * pass + one bounded usage collect per schedule round (see the public
-    * scaladoc for the full contract). Returns None on an empty corpus. */
-  private def unigramTrainCore(df: DataFrame, textCol: String,
+  /** The [[unigramLmTrain]] loop body — one E-step job per schedule round
+    * plus one under the final model (see the public scaladoc for the full
+    * contract). Returns None on an empty corpus. */
+  private def unigramTrainCore(op: String, df: DataFrame, textCol: String,
       maxPieceLen: Int, seedV: Int, targetV: Int,
-      pruneFrac: Double, soft: Boolean = false): Option[UnigramTrained] = {
-    require(maxPieceLen >= 2, s"unigram training: need maxPieceLen >= 2, got $maxPieceLen")
-    require(seedV <= 61440,
-      s"unigram training: seedV capped at 61440 (the 65536 plan-embed bound minus a 4096-codepoint character-backbone reservation), got $seedV")
+      pruneFrac: Double, soft: Boolean): Option[UnigramTrained] = {
     val sched = unigramPruneSchedule(seedV, targetV, pruneFrac)
-    val words = df.select(explode(toks(col(textCol))).as("word"))
-      .where(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("wc"))
-      .localCheckpoint()
-    val subs = words.select(col("word"), col("wc"),
-      explode(flatten(transform(
-        sequence(lit(1), length(col("word"))),
-        i => transform(
-          sequence(lit(1), least(lit(maxPieceLen), length(col("word")) - i + 1)),
-          l => col("word").substr(i, l))))).as("piece"))
-    val pf = subs.groupBy("piece").agg(sum(col("wc")).as("freq"))
-    // alphabet capped at the plan-embed bound minus the multi budget (the
-    // unigramLmVocab cap rationale; tail → unk fallback)
-    val seedRows = pf.where(length(col("piece")) === 1)
-      .orderBy(col("freq").desc, col("piece")).limit(65536 - seedV)
-      .union(pf.where(length(col("piece")) >= 2)
-        .orderBy(col("freq").desc, col("piece")).limit(seedV))
-      .select(col("piece"), col("freq")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
+    val (words, seedRows) = unigramSeed(op, df, textCol, maxPieceLen, seedV, "seedV")
     if (seedRows.isEmpty) return None
-    def isChar(p: String) = p.codePointCount(0, p.length) == 1
-    // the evolving model: (piece, weight); seg() = one zero-shuffle
-    // codegen pass + one bounded usage collect
-    def segUsage(model: Array[(String, Long)]): Map[String, Long] = {
-      val (pieces, probs, unk) = modelProbs(model)
-      if (soft)
-        // the soft E-step: forward–backward expected counts, quantized to
-        // integers IN-ROW (graft.expr.UnigramExpected) so the Σ wc·q
-        // aggregate is order-independent — the q231 discipline inside the
-        // training loop; the collect stays vocab-bounded (expected-count
-        // pieces are vocab members plus unk singles, which only exist
-        // past the alphabet cap)
-        // split-long rollup + loud BIGINT-range check — the unigramLmSoftEm
-        // usage_soft_q discipline (r22: same exact envelope, long-sum
-        // hash-agg speed; the decimal form ran per EM iteration here and
-        // made q234 5.15 s in a full bench session — see the derivation at
-        // unigramLmSoftEm)
-        words.select(col("wc"), explode(graft.functions.unigram_expected(
-            col("word"), pieces, probs, unk)).as("e"))
-          .select(col("wc"), col("e.piece").as("piece"), col("e.q").as("q"))
-          .groupBy("piece")
-          .agg(sum(col("wc") * expr("q div 4096")).as("__ushi"),
-            sum(col("wc") * (col("q") % 4096)).as("__uslo"),
-            sum(col("wc")).as("__usw"))
-          .select(col("piece"), {
-            val tot = col("__ushi").cast("decimal(38,0)") * lit(4096L) + col("__uslo")
-            when(col("__usw") >= lit(562949953421312L), // 2^49
-              raise_error(lit("unigramTrainCore: soft usage partial-sum " +
-                "envelope exceeded — corpus beyond the documented " +
-                "~10^13-token envelope")).cast("long"))
-              .when(tot.cast("long").isNotNull, tot.cast("long"))
-              .otherwise(raise_error(lit(
-                "unigramTrainCore: soft usage overflowed BIGINT — corpus beyond the documented ~10^12-token envelope")).cast("long"))
-              .as("usage")
-          })
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      else
-        words.select(col("wc"), explode(graft.functions.unigram_segment(
-            col("word"), pieces, probs, unk)).as("piece"))
-          .groupBy("piece").agg(sum(col("wc")).as("usage"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    // hard: Viterbi-path counts; soft: the exact Σ wc·q of the q231 E-step
+    def segUsage(model: Array[(String, Long)]): Map[String, Long] =
+      unigramUsage(op, words, model, hard = !soft, soft = soft)
+        .map { case (p, (h, q)) => p -> (if (soft) q else h) }
     // the character-backbone smoothing: one occurrence — which in soft
     // mode is 2^24 quantization units (the q231 M-step rule)
     val charSmooth = if (soft) 16777216L else 1L
@@ -2190,8 +1998,7 @@ object TextAnalysis {
       val multiKept = model.filter(m => !isChar(m._1))
         .map { case (p, _) => (p, usage.getOrElse(p, 0L)) }
         .filter(_._2 > 0)
-        .sortWith { case ((p1, u1), (p2, u2)) =>
-          u1 > u2 || (u1 == u2 && utf8Less(p1, p2)) }
+        .sortBy { case (p, u) => (UTF8String.fromString(p), u) }(Kernels.unigramSeedOrder)
         .take(keepV)
       model = charsW ++ multiKept
       (charsW.iterator.map(_._1) ++ multiKept.iterator.map(_._1))
@@ -2202,7 +2009,7 @@ object TextAnalysis {
 
   /** (pieces, probs, unkScore) for a (piece, weight) model — the single
     * place the probability arithmetic lives so every consumer hands the
-    * IDENTICAL doubles to the codegen kernel. */
+    * IDENTICAL doubles to the kernels. */
   private def modelProbs(model: Array[(String, Long)])
       : (IndexedSeq[String], IndexedSeq[Double], Double) = {
     val total = model.map(_._2).sum
@@ -2211,73 +2018,98 @@ object TextAnalysis {
       1.0 / (total.toDouble * 1000000.0))
   }
 
-  def unigramLmTrain(df: DataFrame, textCol: String, maxPieceLen: Int = 4,
-      seedV: Int = 96, targetV: Int = 24, pruneFrac: Double = 0.5): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    unigramTrainCore(df, textCol, maxPieceLen, seedV, targetV, pruneFrac) match {
-      case None =>
-        Seq.empty[(String, Long, Boolean, Int, Option[Double], Long)]
-          .toDF("piece", "freq", "is_char", "rounds_survived", "final_p", "final_usage")
-      case Some(t) =>
-        def isChar(p: String) = p.codePointCount(0, p.length) == 1
-        // final_p comes from the SAME modelProbs arithmetic the decode
-        // kernel ran with — not a second hand-rolled normalization
-        // (round-19 review finding: the report must show the exact
-        // doubles the segmentation used)
-        val (pieces, probs, _) = modelProbs(t.model)
-        val finalP = pieces.iterator.zip(probs.iterator).toMap
-        spark.createDataFrame(t.seedRows.map { case (p, f) =>
-            (p, f, isChar(p), t.survivedRounds(p), finalP.get(p),
-              t.finalUsage.getOrElse(p, 0L))
-          }.toSeq)
-          .toDF("piece", "freq", "is_char", "rounds_survived", "final_p", "final_usage")
-    }
+  private def isChar(p: String): Boolean = p.codePointCount(0, p.length) == 1
+
+  /** The unigram learners' shared start: the (word, wc) counts of the
+    * corpus's non-empty space-separated words — one corpus scan and
+    * shuffle, localCheckpointed once and read as an RDD by every later
+    * job — and the seed vocabulary (piece, freq) from ONE job: every
+    * code-point substring of up to maxPieceLen code points (Spark `substr`
+    * semantics) summed by wc, then, per partition and again on the driver,
+    * the top (65536 − multiV) single code points and the top multiV longer
+    * pieces by (freq desc, piece asc in UTF-8 byte order). Characters come
+    * first.
+    *
+    * The alphabet is CAPPED at the 65536-piece vocabulary bound minus the
+    * multi budget (ADVICE r18): a full multilingual codepoint inventory (CJK
+    * extensions + symbols + emoji) can exceed 65536 distinct codepoints;
+    * keeping the most frequent routes the long tail through the kernels'
+    * single-codepoint unk fallback (which exists exactly for out-of-vocab
+    * codepoints), so the DP stays total. The cap never binds at oracle
+    * scale, so the DuckDB replay (which seeds every codepoint) is
+    * unaffected where it runs. multiV ≤ 61440 keeps a 4096-codepoint
+    * backbone (ADVICE r19).
+    */
+  private def unigramSeed(op: String, df: DataFrame, textCol: String,
+      maxPieceLen: Int, multiV: Int, multiName: String)
+      : (RDD[(UTF8String, Long)], Array[(String, Long)]) = {
+    require(maxPieceLen >= 2 && multiV >= 1,
+      s"$op: need maxPieceLen >= 2 and $multiName >= 1, got $maxPieceLen/$multiV")
+    require(multiV <= 61440,
+      s"$op: $multiName capped at 61440 (the 65536 vocabulary bound minus a 4096-codepoint character-backbone reservation), got $multiV")
+    val words = df.select(explode(toks(col(textCol))).as("word"))
+      .where(length(col("word")) > 0)
+      .groupBy("word").agg(count(lit(1)).as("wc"))
+      .localCheckpoint()
+      .queryExecution.toRdd.map(r => (r.getUTF8String(0).copy(), r.getLong(1)))
+    val charV = 65536 - multiV
+    val tops = words
+      .flatMap { case (w, wc) =>
+        val n = w.numChars
+        (0 until n).iterator.flatMap(i => (1 to math.min(maxPieceLen, n - i)).iterator
+          .map(l => (w.substring(i, i + l), wc)))
+      }
+      .reduceByKey(Kernels.usageAdd(op, _, _))
+      .mapPartitions { it =>
+        val (c, m) = it.toArray.partition(_._1.numChars == 1)
+        Iterator((c.sorted(Kernels.unigramSeedOrder).take(charV),
+          m.sorted(Kernels.unigramSeedOrder).take(multiV)))
+      }
+      .collect()
+    def top(xs: Array[(UTF8String, Long)], k: Int) =
+      xs.sorted(Kernels.unigramSeedOrder).take(k).map { case (p, f) => (p.toString, f) }
+    (words, top(tops.flatMap(_._1), charV) ++ top(tops.flatMap(_._2), multiV))
   }
 
-  /** The FULL Kudo 2018 §3.2 loop with the TRUE (soft-EM) E-step — the
-    * [[unigramLmTrain]] schedule driven by forward–backward EXPECTED
-    * counts instead of Viterbi-path counts (the q231 E-step inside the
-    * q223 loop, completing VERDICT r19 #2): per round, usage is the
-    * integer-quantized posterior mass Σ wc·⌊eq·2^24⌋, pruning keeps the
-    * top-scheduled multi-pieces by (expected mass DESC, piece UTF-8 ASC),
-    * and re-estimation weights are the quantized masses with the
-    * character backbone smoothed by 2^24 (= one occurrence in q units).
-    * The loop's behavioral difference from hard EM is exactly the q231
-    * divergence surface, compounded: a near-tied piece the Viterbi path
-    * never uses carries zero hard usage and dies in round 1, while its
-    * lattice mass keeps it alive here (UnigramLmSpec pins a corpus where
-    * the two loops ship DIFFERENT final vocabularies).
-    *
-    * Scale shape: identical to unigramLmTrain — schedule-bounded passes
-    * (data-independent count) over the localCheckpointed distinct-words
-    * frame; the soft E-step is a zero-shuffle codegen projection
-    * (UnigramExpected) with a vocab-bounded usage collect per round; all
-    * cross-engine arithmetic stays on the q231 exactness disciplines.
-    *
-    * Output mirrors unigramLmTrain with final_usage in q units:
-    * piece, freq, is_char, rounds_survived, final_p, final_usage_q.
+  /** One E-step job over the (word, wc) counts under `model` (piece,
+    * weight): per piece, the wc-weighted count on each word's Viterbi path
+    * (`hard`, Kernels.unigramSegment) and Σ wc·q over its quantized
+    * forward–backward posteriors (`soft`, Kernels.unigramExpected), both
+    * from the same pass over the words when both are asked for. The model
+    * passes the UnigramSegment.vocab checks first. An empty model runs no
+    * job.
     */
-  def unigramLmTrainSoft(df: DataFrame, textCol: String, maxPieceLen: Int = 4,
-      seedV: Int = 96, targetV: Int = 24, pruneFrac: Double = 0.5): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    unigramTrainCore(df, textCol, maxPieceLen, seedV, targetV, pruneFrac,
-        soft = true) match {
-      case None =>
-        Seq.empty[(String, Long, Boolean, Int, Option[Double], Long)]
-          .toDF("piece", "freq", "is_char", "rounds_survived", "final_p", "final_usage_q")
-      case Some(t) =>
-        def isChar(p: String) = p.codePointCount(0, p.length) == 1
-        val (pieces, probs, _) = modelProbs(t.model)
-        val finalP = pieces.iterator.zip(probs.iterator).toMap
-        spark.createDataFrame(t.seedRows.map { case (p, f) =>
-            (p, f, isChar(p), t.survivedRounds(p), finalP.get(p),
-              t.finalUsage.getOrElse(p, 0L))
-          }.toSeq)
-          .toDF("piece", "freq", "is_char", "rounds_survived", "final_p", "final_usage_q")
+  private def unigramUsage(op: String, words: RDD[(UTF8String, Long)],
+      model: Array[(String, Long)], hard: Boolean, soft: Boolean)
+      : Map[String, (Long, Long)] =
+    if (model.isEmpty) Map.empty
+    else {
+      val (pieces, probs, unk) = modelProbs(model)
+      val (vocab, maxLen) = graft.expr.UnigramSegment.vocab(op, pieces, probs, unk, soft)
+      unigramRollup(op, words.flatMap { case (w, wc) =>
+        val path = if (hard) Kernels.unigramSegment(w, vocab, unk, maxLen).array else Array.empty[Any]
+        val post = if (soft) Kernels.unigramExpected(w, vocab, unk, maxLen).array else Array.empty[Any]
+        path.iterator.map(p => (p.toString, (wc, 0L, 0L))) ++ post.iterator.map { e =>
+          val r = e.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+          (r.getUTF8String(0).toString, (0L, wc, r.getLong(1)))
+        }
+      }).collect().toMap
     }
-  }
+
+  /** The E-step rollup: per piece, Σ hard and Σ wc·q over (piece, (hard,
+    * wc, q)) terms, in exact BIGINT arithmetic (Kernels.usageTimes and
+    * usageAdd), so the sums are order-independent, and one past
+    * Long.MaxValue fails with an error naming `op`.
+    */
+  private[operators] def unigramRollup(op: String,
+      terms: RDD[(String, (Long, Long, Long))]): RDD[(String, (Long, Long))] =
+    terms.mapValues { case (h, wc, q) => (h, Kernels.usageTimes(op, wc, q)) }
+      .reduceByKey((a, b) => (Kernels.usageAdd(op, a._1, b._1), Kernels.usageAdd(op, a._2, b._2)))
+
+  /** A local relation of `rows` under the DDL schema: collecting it runs no
+    * Spark job. */
+  private def localRelation(df: DataFrame, ddl: String, rows: Seq[Row]): DataFrame =
+    df.sparkSession.createDataFrame(rows.asJava, StructType.fromDDL(ddl))
 
   /** Tokenizer fit of the TRAINED unigram vocabulary, per source — the
     * [[fertilityByScript]] dashboard re-aimed at the [[unigramLmTrain]]
@@ -2291,17 +2123,19 @@ object TextAnalysis {
     * fertility: pieces_per_kchar = n_pieces·1000 div n_chars (chars =
     * non-space codepoints, the kernel's own word alphabet).
     *
-    * Scale shape: training cost is the q223 loop (schedule-bounded
-    * passes over the DISTINCT-words frame); the corpus-sized work is the
-    * single decode projection + one ≤|sources|-group aggregate — no
-    * joins, no corpus-keyed exchange beyond the aggregate's.
+    * Scale shape: training is the q223 loop (one word count, then one
+    * Spark job per seed and per E-step over the distinct words); the
+    * corpus-sized work is the single decode projection + one
+    * ≤|sources|-group aggregate — no joins, no corpus-keyed exchange
+    * beyond the aggregate's.
     */
   def unigramFertilityBySource(df: DataFrame, textCol: String,
       sourceCol: String, maxPieceLen: Int = 4, seedV: Int = 96,
       targetV: Int = 24, pruneFrac: Double = 0.5): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    unigramTrainCore(df, textCol, maxPieceLen, seedV, targetV, pruneFrac) match {
+    unigramTrainCore("unigramFertilityBySource", df, textCol, maxPieceLen, seedV, targetV,
+        pruneFrac, soft = false) match {
       case None =>
         // no trainable words does NOT mean no sources: the report still
         // rolls up every source with zero pieces — the oracle aggregates
