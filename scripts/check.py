@@ -71,6 +71,10 @@ def main(sf_dir, out_dir):
             print(f"ok   {name} ({len(got)} rows)")
             n_ok += 1
     print(f"== {n_ok} ok, {n_bad} fail")
+    if n_ok + n_bad == 0:
+        # an empty dump (e.g. a subset that selected nothing) checks nothing
+        print("FAIL: no query compared")
+        return 1
     return 1 if n_bad else 0
 
 if __name__ == "__main__":

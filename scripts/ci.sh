@@ -4,6 +4,12 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# No step may change a tracked file: compare the tracked tree's state (status
+# and diff, so a developer's own uncommitted edits do not count) at the start
+# and at the end.
+tracked_state() { git status --porcelain --untracked-files=no; git diff; }
+tracked_at_start=$(tracked_state)
+
 echo "== repo-root hygiene lint"
 # VERDICT r15 #2: a C-locale JVM turns non-ASCII argv into literal '?'s,
 # and an out-path arg mix-up in the dump tools then creates a zero-byte
@@ -91,6 +97,23 @@ python3 scripts/check.py /root/testdata/sf0.01 /tmp/graft_ci_vout2
 echo "== smoke (flagship entry + streaming)"
 sbt -batch "runMain graft.Smoke" | grep "\[smoke\]"
 
-echo "== bench (sf0.1)"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" | grep '"metric"'
+echo "== bench (sf0.1): one line per query, total_summary last"
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" |
+  python3 -c '
+import json, sys
+lines = [l for l in sys.stdin.read().splitlines() if l.startswith("{")]
+if not lines:
+    sys.exit("[ci.sh] bench: no JSON line on stdout")
+s = json.loads(lines[-1])
+n = sum(1 for l in lines if json.loads(l).get("kind") == "query")
+if s.get("metric") != "total_summary" or s.get("fails") != 0 or n != s.get("n"):
+    sys.exit("[ci.sh] bench: last line %s, %d query lines" % (lines[-1], n))
+print(lines[-1])'
+
+echo "== no tracked file changed"
+if [ "$(tracked_state)" != "$tracked_at_start" ]; then
+  echo "[ci.sh] tracked files changed during the gate:" >&2
+  git status --porcelain --untracked-files=no >&2
+  exit 1
+fi
 echo "CI OK"

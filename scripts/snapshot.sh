@@ -24,61 +24,6 @@ fi
 summary=$(grep -E "dictlint|All tests passed|ok, 0 fail|\[smoke\]|\"metric\"|CI OK" "$gate_log" \
   | sed 's/^\[info\] *//' | cut -c1-200)
 
-# Contention guard (VERDICT r14 "Next round" #2, recurring since r8): the
-# driver's per-round bench run is often contended (q62's zero-arg version
-# call inflates 100x under ambient load) and keeps overwriting the clean
-# committed bench_full.json in the working tree. Refuse to stage a
-# bench_full.json whose version-call floor or rep spread is worse than the
-# committed snapshot's — the clean run is the comparable artifact.
-if ! git diff --quiet -- bench_full.json 2>/dev/null; then
-  if ! python3 - <<'PYEOF'
-import json, subprocess, sys
-try:
-    new = json.load(open("bench_full.json"))
-    old = json.loads(subprocess.run(
-        ["git", "show", "HEAD:bench_full.json"],
-        capture_output=True, text=True, check=True).stdout)
-except Exception:
-    sys.exit(0)  # no committed baseline yet, or unparseable: allow
-def floor(d):
-    v = d.get("version_call_floor_sec")
-    if v is None:
-        v = d.get("queries", {}).get("q62_version_call")
-    return v
-nf, of = floor(new), floor(old)
-ns, os_ = new.get("median_rep_spread"), old.get("median_rep_spread")
-bad = []
-# Floor ratio tightened 3x -> 1.5x (VERDICT r20 #2): the round-20 closing
-# gate overwrote a 132 s-class clean artifact with a 155.9 s loaded-window
-# run whose floor (0.040 vs 0.017 = 2.4x) sailed under the old 3x gate.
-# 1.5x (+10 ms absolute slack so two near-idle floors never reject each
-# other) catches exactly that direction: the gate's own closing run being
-# the loaded one. The divert guards in Bench.scala protect the tree from
-# the DRIVER's runs; this protects it from ours.
-floor_bad = nf is not None and of is not None and nf > max(of * 1.5, of + 0.010)
-spread_bad = ns is not None and os_ is not None and ns > os_ * 1.5
-# The version-call floor is plan-independent: ambient contention inflates
-# it 1:1, while a genuine per-query regression leaves it flat. Rep spread
-# also rises under a real regression, so it only corroborates the floor
-# (ADVICE r15) — a regressed-but-idle run now stages and gets compared
-# honestly instead of being silently discarded as "contention".
-if floor_bad:
-    bad.append(f"version-call floor {nf:.3f}s vs committed {of:.3f}s")
-    if spread_bad:
-        bad.append(f"median_rep_spread {ns} vs committed {os_}")
-elif spread_bad and of is None:
-    bad.append(f"median_rep_spread {ns} vs committed {os_} (no floor to corroborate)")
-if bad:
-    print("CONTENDED BENCH: " + "; ".join(bad))
-    sys.exit(1)
-PYEOF
-  then
-    echo "== bench_full.json looks contended — stashing to bench_full.contended.json and restoring committed snapshot"
-    cp bench_full.json bench_full.contended.json
-    git checkout -- bench_full.json
-  fi
-fi
-
 git add -A
 if git diff --cached --quiet; then
   echo "== nothing to commit (gate green, tree clean)"

@@ -1,19 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
 
-/** Driver benchmark contract: run the headline queries on
-  * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
-  * Timing excludes JVM/session warmup (one throwaway query first).
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Driver benchmark contract: time the SparkEntry queries (all, or the exact
+  * names in SPARK_GRAFT_ONLY) on SPARK_GRAFT_SF_DIR and print, on stdout, one
+  * JSON line per query — min wall time over the reps, rep spread, and the
+  * work counters of the reported rep — then one `total_summary` line, which
+  * stays last. Writes no file. Timing excludes JVM/session warmup (one
+  * throwaway query first).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val names = SparkEntry.selected()
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val spark = Session.local()
+    val sc = spark.sparkContext
+    val counters = new GroupCounters
+    sc.addSparkListener(counters)
     // Full materialization via the noop sink: count() would let Catalyst
     // prune projections and drop terminal sorts, timing a fraction of the
     // real work. noop executes every expression and discards rows.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+    def run(fn: (SparkSession, String) => DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     // JVM/codegen/parquet-footer warmup — a dedicated query OUTSIDE the
     // timed suite (VERDICT r8 #7: warming up with q01 double-JITs it and
@@ -29,63 +41,159 @@ object Bench {
         .select(length(col("text")).as("wl")).agg(sum("wl").as("wt"))
       li.crossJoin(ev.limit(1)).crossJoin(dc)
     })
-    // min of 2 runs per query: this host shows up to 2x run-to-run noise
+    val queries = SparkEntry.queries
+    // min of the reps per query: this host shows up to 2x run-to-run noise
     // (see PLANS.md); min is the standard estimator for intrinsic cost.
-    // A failing query records -1 (visible in the JSON) + a stderr line.
-    // SPARK_GRAFT_BENCH_ONLY=q67,q68 narrows to named queries (prefix
-    // match) for targeted re-measurement without a 104-query run; the
-    // driver never sets it, so the contract run is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty))
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith))
-    }
-    val spreads = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val results = selected.map { case (name, fn) =>
-      def rep(): Option[Double] = {
+    // Each rep runs under its own job group, set before the query's
+    // DataFrame is built, so the jobs an operator runs while it builds
+    // count toward its query.
+    val timed = names.map { name =>
+      var error = ""
+      def rep(i: Int): Option[(Double, String)] = {
+        val group = s"bench:$name#$i"
+        sc.setJobGroup(group, name, interruptOnCancel = false)
         val t0 = System.nanoTime()
-        try { run(fn); Some((System.nanoTime() - t0) / 1e9) }
+        try { run(queries(name)); Some((System.nanoTime() - t0) / 1e9 -> group) }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          error = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+          System.err.println(s"[bench] $name failed: $error")
           None
-        }
+        } finally sc.clearJobGroup()
       }
-      val base = (1 to reps).flatMap(_ => rep())
+      val base = (1 to reps).flatMap(rep)
       // Adaptive third rep (VERDICT r16 #8): the r16 bursty artifact's
       // 10-20x per-query inflations were SINGLE-REP outliers — when the
       // two base reps disagree the min is untrustworthy, so exactly the
       // noisy queries pay one more rep (an idle host pays ~nothing; a
       // uniform reps=3 would cost +50% driver wall-clock everywhere).
       val times =
-        if (base.length >= 2 && Bench.needsExtraRep(base)) base ++ rep()
+        if (base.length >= 2 && needsExtraRep(base.map(_._1))) base ++ rep(reps + 1)
         else base
-      // max/min spread per query: on an idle host this sits near 1; a
-      // contended sandbox (the r8 artifact) shows 5-40x swings. Printing it
-      // makes a contaminated run self-evident (VERDICT r8 #3).
-      if (times.length >= 2 && times.min > 0) spreads += name -> (times.max / times.min)
-      name -> (if (times.isEmpty) -1.0 else times.min)
+      (name, times, error)
     }
-    // Run-quality metrics live in the JSON artifact itself (ADVICE r9): a
-    // contended snapshot is identifiable after the fact without the stderr
-    // log. median_rep_spread near 1 = idle host; >2 = contended, don't trust.
-    val medianSpread =
-      if (spreads.isEmpty) -1.0 else spreads.map(_._2).sorted.apply(spreads.length / 2)
-    if (spreads.nonEmpty) {
-      val worst = spreads.sortBy(-_._2).take(5)
-        .map { case (n, r) => f"$n=${r}%.1fx" }.mkString(", ")
-      System.err.println(
-        f"[bench] rep spread: median=${medianSpread}%.2fx worst: $worst" +
-        (if (medianSpread > 2.0) "  ** CONTENDED RUN — do not snapshot **" else ""))
+    // One drain for the whole run: the listener bus delivers events
+    // asynchronously, and every job has ended by now.
+    GraftSparkBridge.drainListeners(sc)
+    val results = timed.map { case (name, times, error) =>
+      if (times.isEmpty) QueryRun(name, -1.0, -1.0, counters(s"bench:$name#$reps"), error)
+      else {
+        val (wall, group) = times.minBy(_._1)
+        // max/min spread per query: on an idle host this sits near 1; a
+        // contended sandbox (the r8 artifact) shows 5-40x swings.
+        val spread = if (times.length >= 2 && wall > 0) times.map(_._1).max / wall else -1.0
+        QueryRun(name, wall, spread, counters(group), "")
+      }
     }
-    val spreadMap = spreads.toMap
+    results.foreach(r => println(queryLine(r)))
+    println(summaryLine(results, sfDir))
+    spark.stop()
+  }
+
+  /** Work counters of the Spark jobs that ran under one job group. */
+  final case class Work(jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
+      cpuNs: Long = 0, shuffleBytes: Long = 0, inputBytes: Long = 0) {
+    def +(o: Work): Work = Work(jobs + o.jobs, stages + o.stages, tasks + o.tasks,
+      cpuNs + o.cpuNs, shuffleBytes + o.shuffleBytes, inputBytes + o.inputBytes)
+  }
+
+  /** Sums [[Work]] per job group. A stage belongs to the group of the job
+    * that submitted it (`onJobStart`'s properties and stage ids); jobs run
+    * outside any group are not counted.
+    */
+  final class GroupCounters extends SparkListener {
+    private val byGroup = new ConcurrentHashMap[String, Work]()
+    private val stageGroup = new ConcurrentHashMap[Int, String]()
+
+    def apply(group: String): Work = byGroup.getOrDefault(group, Work())
+
+    private def add(group: String, w: Work): Unit =
+      if (group != null) byGroup.merge(group, w, (a: Work, b: Work) => a + b)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+      if (group != null) {
+        e.stageIds.foreach(stageGroup.put(_, group))
+        add(group, Work(jobs = 1))
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      add(stageGroup.get(e.stageInfo.stageId), Work(stages = 1))
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val m = e.taskMetrics
+      add(stageGroup.get(e.stageId),
+        if (m == null) Work(tasks = 1)
+        else Work(tasks = 1, cpuNs = m.executorCpuTime,
+          shuffleBytes = m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten,
+          inputBytes = m.inputMetrics.bytesRead))
+    }
+  }
+
+  /** One query's result: min wall seconds (-1 when every rep failed), max/min
+    * rep spread (-1 with fewer than two successful reps), the reported rep's
+    * work, and the last error ("" on success).
+    */
+  final case class QueryRun(query: String, wallS: Double, spread: Double, work: Work, error: String)
+
+  // %f through the f-interpolator is locale-sensitive (comma decimals under
+  // de_DE would corrupt the JSON); route all fixed-point formatting through
+  // Locale.ROOT (ADVICE r10).
+  private def fmt(v: Double, digits: Int = 3): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** Longest error text kept on a query line: at most 6 bytes per char once
+    * escaped, so the line stays under 4 KB.
+    */
+  private final val MaxErrorChars = 500
+
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in a message or in builder-authored SQL would
+    * otherwise make a consumer's JSON parse fail.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** One query's stdout line, under 4 KB: the error, if any, is cut to
+    * [[MaxErrorChars]].
+    */
+  def queryLine(r: QueryRun): String = {
+    val w = r.work
+    val error =
+      if (r.error.isEmpty) ""
+      else {
+        val cut = math.min(r.error.length, MaxErrorChars)
+        val end = if (cut > 0 && Character.isHighSurrogate(r.error.charAt(cut - 1))) cut - 1 else cut
+        ",\"error\":" + jsonString(r.error.substring(0, end))
+      }
+    s"""{"kind":"query","query":${jsonString(r.query)},"wall_s":${fmt(r.wallS, 4)},""" +
+      s""""spread":${fmt(r.spread)},"jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},""" +
+      s""""cpu_s":${fmt(w.cpuNs / 1e9)},"shuffle_mb":${fmt(w.shuffleBytes / 1e6)},""" +
+      s""""input_mb":${fmt(w.inputBytes / 1e6)}$error}"""
+  }
+
+  /** The run's last stdout line: total seconds over successful queries plus
+    * the run-quality signals.
+    */
+  def summaryLine(results: Seq[QueryRun], sfDir: String): String = {
+    val walls = results.map(_.wallS)
+    val total = walls.filter(_ >= 0).sum
+    val fails = walls.count(_ < 0)
+    // median_rep_spread near 1 = idle host; >2 = contended, don't trust.
+    val spreads = results.map(_.spread).filter(_ >= 0).sorted
+    val medianSpread = if (spreads.isEmpty) -1.0 else spreads(spreads.length / 2)
     // Contention canary (VERDICT r14 #3): q62's zero-arg version call does
     // no data work — clean hosts run it in ~0.02 s, and any inflation is
-    // plan-independent ambient load, 1:1. Emitting its floor (plus the min
-    // across the five cheapest queries) in the parsed summary makes a
-    // contended driver run machine-identifiable, so >2x per-query flags can
-    // be discounted automatically instead of re-litigated every round.
+    // plan-independent ambient load, 1:1.
     val versionFloor = results.collectFirst {
-      case (n, v) if n.startsWith("q62") && v >= 0 => v
+      case r if r.query.startsWith("q62") && r.wallS >= 0 => r.wallS
     }.getOrElse(-1.0)
     // 5th-cheapest (not cheapest): a uniform ~1 s contention floor inflates
     // it 1:1 and a single lucky query cannot mask it. Fewer than 5
@@ -93,113 +201,13 @@ object Bench {
     // would make the floor incomparable across runs exactly when the bench
     // is most broken (ADVICE r15).
     val cheapFloor5 = {
-      val ok = results.map(_._2).filter(_ >= 0).sorted.take(5)
+      val ok = walls.filter(_ >= 0).sorted.take(5)
       if (ok.length < 5) -1.0 else ok.last
     }
-    // %f through the f-interpolator is locale-sensitive (comma decimals under
-    // de_DE would corrupt the JSON); route all fixed-point formatting through
-    // Locale.ROOT (ADVICE r10).
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val sp = results.map { case (k, _) =>
-      "\"" + k + "\":" + fmt(spreadMap.getOrElse(k, -1.0)) }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val fails = results.count(_._2 < 0)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""median_rep_spread":${fmt(medianSpread)},"rep_spread":$sp,""" +
-      s""""version_call_floor_sec":${fmt(versionFloor)},"cheap5_floor_sec":${fmt(cheapFloor5)},"sf":"$sfDir"}"""
-    println(line)
-    // Compact summary as the LAST stdout line: the full artifact line above
-    // is ~9 KB and the driver's tail capture truncates it mid-object
-    // (BENCH_r04..r10 all parsed null). This one is <200 bytes and carries
-    // the headline numbers the driver needs (VERDICT r10 #3).
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${results.size},""" +
+    s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${results.size},""" +
       s""""fails":$fails,"median_rep_spread":${fmt(medianSpread)},""" +
-      s""""version_call_floor_sec":${fmt(versionFloor)},"cheap5_floor_sec":${fmt(cheapFloor5)},"sf":"$sfDir"}""")
-    // The driver's stdout capture truncates long lines (BENCH_r06 kept only
-    // q43+), so the full per-query artifact is also persisted in-repo —
-    // every query's number survives the round regardless of stdout limits.
-    // A filtered run never overwrites the full artifact by default.
-    // Write-time contention guard (VERDICT r15 #6, recurring since r8):
-    // the driver's per-round run is often contended and kept clobbering
-    // the committed clean bench_full.json in the working tree, forcing a
-    // restore dance every round. When the default path already holds an
-    // artifact whose canaries are materially better than this run's
-    // (same thresholds as scripts/snapshot.sh), divert to
-    // bench_driver.json (gitignored) — the contended run stays
-    // inspectable without dirtying the comparable artifact. An explicit
-    // SPARK_GRAFT_BENCH_OUT always wins.
-    val defaultOut = if (only.isDefined) "/tmp/bench_partial.json" else "bench_full.json"
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
-      val prior = java.nio.file.Paths.get(defaultOut)
-      // divert reasons: 1 = sf mismatch (incomparable prior — the history
-      // entry would be garbage against it, so skip it), 2 = canaries
-      // (the contention-vs-regression ambiguity the history disambiguates)
-      val divertReason = if (defaultOut != "bench_full.json"
-          || !java.nio.file.Files.exists(prior)) 0
-      else {
-        try {
-          val txt = new String(java.nio.file.Files.readAllBytes(prior),
-            java.nio.charset.StandardCharsets.UTF_8)
-          // sf mismatch diverts unconditionally: a different-SF run is
-          // incomparable by construction, and its canaries can look
-          // BETTER than the committed artifact's (the round-20 sf0.001
-          // contamination incident) — the floor/spread guards below
-          // cannot catch that direction
-          if (Bench.sfMismatch(txt, sfDir)) {
-            System.err.println(s"[bench] prior artifact is a different SF than $sfDir — diverting")
-            1
-          } else if (Bench.shouldDivert(txt, versionFloor, medianSpread, results)) 2
-          else 0
-        } catch { case _: Throwable => 0 }
-      }
-      if (divertReason == 2) {
-        System.err.println("[bench] canaries worse than existing bench_full.json — writing bench_driver.json instead")
-        // ADVICE r19 #3: the burst heuristic cannot distinguish contention
-        // from a real 3-query shared-kernel regression, so every
-        // canary-diverted run is ALSO appended to a tracked JSONL history
-        // with its inflated-query names — a repeat of the same names
-        // across consecutive diverted runs is the regression signature,
-        // flagged loudly here and inspectable in-file after the fact.
-        // (sf-mismatch diverts skip the history: every query looks
-        // "inflated" against an incomparable prior.)
-        try {
-          val txt = new String(java.nio.file.Files.readAllBytes(prior),
-            java.nio.charset.StandardCharsets.UTF_8)
-          val inflated = Bench.inflatedQueries(txt, results).sorted
-          val histPath = java.nio.file.Paths.get("bench_diverted.jsonl")
-          if (java.nio.file.Files.exists(histPath)) {
-            val lastLine = new String(java.nio.file.Files.readAllBytes(histPath),
-              java.nio.charset.StandardCharsets.UTF_8)
-              .split("\n").filter(_.nonEmpty).lastOption.getOrElse("")
-            val prevInflated = "\"inflated\":\\[([^\\]]*)\\]".r
-              .findFirstMatchIn(lastLine)
-              .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-                .filter(_.nonEmpty).toSet)
-              .getOrElse(Set.empty[String])
-            val repeat = inflated.toSet.intersect(prevInflated)
-            if (repeat.size >= 3)
-              System.err.println(s"[bench] WARNING: ${repeat.size} queries inflated in " +
-                s"CONSECUTIVE diverted runs (${repeat.toSeq.sorted.mkString(", ")}) — " +
-                "suspect a real regression, not contention; diff the bench_diverted.jsonl entries")
-          }
-          val entry = inflated.map("\"" + _ + "\"").mkString(
-            "{\"inflated\":[", ",", s"],\"run\":$line}\n")
-          java.nio.file.Files.write(histPath,
-            entry.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] diverted-history write failed: ${e.getMessage}")
-        }
-        "bench_driver.json"
-      } else if (divertReason == 1) "bench_driver.json"
-      else defaultOut
-    })
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[bench] write $out failed: ${e.getMessage}") }
-    spark.stop()
+      s""""version_call_floor_sec":${fmt(versionFloor)},"cheap5_floor_sec":${fmt(cheapFloor5)},""" +
+      s""""sf":${jsonString(sfDir)}}"""
   }
 
   /** A third rep is warranted when the base reps disagree by over 1.5x
@@ -209,99 +217,4 @@ object Bench {
     */
   def needsExtraRep(times: Seq[Double]): Boolean =
     times.min >= 0.1 && times.max / times.min > 1.5
-
-  /** Write-time contention decision against the prior artifact's text —
-    * extracted for spec coverage (BenchDivertSpec). Three triggers:
-    *  - floorBad: the plan-independent version-call canary inflated >3x
-    *    (and past 0.2 s absolute) vs the prior artifact's floor.
-    *  - perQueryBad (VERDICT r16 #3): BURSTY contention leaves the floor
-    *    clean while inflating individual queries 10-20x (the r16 artifact:
-    *    clean 0.024 floor, q17_json_extract at 8.6 s). A per-query
-    *    comparison is immune to a clean floor: divert when >= 5 shared
-    *    queries run over 3x their prior times (prior >= 0.05 s so
-    *    0.02 -> 0.07 s noise can't vote). A genuine regression of that
-    *    width still lands in bench_driver.json, which snapshot.sh compares
-    *    honestly — diversion redirects the write, it hides nothing.
-    *  - spreadBad: spread alone can rise under a genuine regression
-    *    (ADVICE r15), so it only decides when no prior floor exists.
-    */
-  /** True when the prior artifact was measured at a DIFFERENT scale
-    * factor than this run: a bench at another SF is not comparable and
-    * must never replace the committed clean artifact (round-20 incident:
-    * an sf0.001 contract-check run overwrote the committed sf0.1
-    * snapshot through the canary guards, which only compare floor/spread
-    * — both of which look fine on a faster-SF run). An unparseable prior
-    * (no "sf" field) does not vote.
-    */
-  def sfMismatch(priorTxt: String, sfDir: String): Boolean =
-    "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(priorTxt)
-      .exists(_.group(1) != sfDir)
-
-  /** Prior per-query times, parsed from ONLY the artifact's "queries"
-    * object ("rep_spread" carries the same key shape and must not
-    * contribute). Shared by [[shouldDivert]] and [[inflatedQueries]].
-    */
-  def priorQueries(priorTxt: String): Map[String, Double] = {
-    val start = priorTxt.indexOf("\"queries\":{")
-    val end = if (start < 0) -1 else priorTxt.indexOf('}', start)
-    if (start < 0 || end < 0) Map.empty
-    else {
-      val body = priorTxt.substring(start + "\"queries\":{".length, end)
-      "\"([^\"]+)\":(-?[0-9.]+(?:[eE][+-]?[0-9]+)?)".r.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
-
-  /** Names of shared queries currently over 3x their committed times (the
-    * per-query signal behind [[shouldDivert]]'s burst triggers), extracted
-    * so the divert path records WHICH queries inflated and the next
-    * diverted run can detect a repeat (ADVICE r19 #3: a genuine
-    * shared-kernel regression of narrow-burst shape would otherwise be
-    * re-suppressed every round with only a stderr note).
-    */
-  def inflatedQueries(priorTxt: String, results: Seq[(String, Double)]): Seq[String] = {
-    val prior = priorQueries(priorTxt)
-    results.collect { case (n, v)
-        if v > 0 && prior.get(n).exists(o => o >= 0.05 && v / o > 3) => n }
-  }
-
-  def shouldDivert(priorTxt: String, versionFloor: Double,
-      medianSpread: Double, results: Seq[(String, Double)]): Boolean = {
-    // Same scientific-notation-aware value regex as the priorQueries parse
-    // below: fmt() writes %.3f today, but a prior artifact serialized with
-    // raw Double.toString would emit 9.8E-4, which "[0-9.]+" reads as 9.8
-    // and silently disables the floorBad trigger (ADVICE r17 — the bug
-    // class already fixed for the queries map).
-    def field(k: String): Option[Double] =
-      ("\"" + k + "\":(-?[0-9.]+(?:[eE][+-]?[0-9]+)?)").r
-        .findFirstMatchIn(priorTxt).map(_.group(1).toDouble)
-    val oldFloor = field("version_call_floor_sec").filter(_ >= 0)
-    val oldSpread = field("median_rep_spread").filter(_ >= 0)
-    val floorBad = oldFloor.exists(of => versionFloor > math.max(of * 3, 0.2))
-    val spreadBad = oldSpread.exists(os => medianSpread > os * 1.5)
-    // priorQueries' value regex accepts full scientific notation incl.
-    // NEGATIVE exponents: query times are serialized with raw
-    // Double.toString, which emits e.g. 9.8E-4 below 1e-3, and a toDouble
-    // throw here would silently disable the whole guard via the caller's
-    // catch (round-17 review finding). A truncated artifact (no closing
-    // brace — the documented tail-truncation mode) degrades to an empty
-    // map, not a substring crash.
-    val prior = priorQueries(priorTxt)
-    val ratios = results.flatMap { case (n, v) =>
-      if (v > 0) prior.get(n).filter(_ >= 0.05).map(o => v / o) else None
-    }
-    val inflated = ratios.count(_ > 3)
-    // Two per-query triggers (VERDICT r18 #4): the original wide burst
-    // (>= 5 shared queries over 3x), and the NARROW-burst form the r18
-    // driver run exposed — exactly 3 queries inflated (5.0x / 4.1x /
-    // 3.4x, clean times flat, code unchanged) and the 130.1 s contended
-    // artifact overwrote the committed clean 122.9 s one. A genuine
-    // 3-query regression rarely carries a >4x outlier while everything
-    // else is flat; contention bursts do. BenchDivertSpec pins the r18
-    // artifact numbers as the fixture.
-    val perQueryBad = inflated >= 5 || (inflated >= 3 && ratios.exists(_ > 4))
-    if (perQueryBad)
-      System.err.println(s"[bench] $inflated shared queries over 3x their committed times — bursty contention")
-    floorBad || perQueryBad || (spreadBad && oldFloor.isEmpty)
-  }
 }

@@ -6,11 +6,12 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val names = SparkEntry.selected(if (args.nonEmpty) Some(args.mkString(",")) else None)
     val spark = Session.local()
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val queries = SparkEntry.queries
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

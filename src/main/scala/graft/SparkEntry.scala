@@ -35,6 +35,25 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQ.map(q => q.name -> q.run).toMap
 
+  /** Sorted names of the queries a harness main runs: the exact names in
+    * `only` (comma-separated, as SPARK_GRAFT_ONLY carries them), or every
+    * query when it is unset. An unknown name or an empty list throws
+    * IllegalArgumentException, so a typo cannot shrink a run to nothing.
+    */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[String] = {
+    val all = allQ.map(_.name)
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
+      case None => all.sorted
+      case Some(names) =>
+        val unknown = names.filterNot(all.toSet)
+        if (names.isEmpty || unknown.nonEmpty)
+          throw new IllegalArgumentException(
+            if (names.isEmpty) s"no query named in '${only.get}'"
+            else "unknown query name(s): " + unknown.mkString(", "))
+        names.distinct.sorted
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

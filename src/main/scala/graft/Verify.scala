@@ -5,18 +5,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY=q127_x,q128_y dumps just those queries and
+    // restricts oracle_sql.json to match, so check.py compares exactly the
+    // subset.
+    val names = SparkEntry.selected()
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    // Dev-loop subset: SPARK_GRAFT_ONLY=q127_x,q128_y dumps just those
-    // queries and restricts oracle_sql.json to match, so check.py compares
-    // exactly the subset. Unset in driver runs — full surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(ns) => SparkEntry.queries.view.filterKeys(ns).toMap
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    val queries = SparkEntry.queries
+    names.foreach { name =>
       // remove any stale dump FIRST: a query failing before its write must
       // not leave a previous run's output to false-pass the compare
       val target = new java.io.File(s"$outDir/$name")
@@ -25,30 +21,14 @@ object Verify {
         f.delete()
       }
       if (target.exists()) rm(target)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val oracles = only match {
-      case Some(ns) => SparkEntry.oracleSql.view.filterKeys(ns).toMap
-      case None => SparkEntry.oracleSql
-    }
-    val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.view.filterKeys(names.toSet)
+      .map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

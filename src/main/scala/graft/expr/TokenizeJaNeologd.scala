@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.GraftVersion
-import graft.ja.{DictEntry, JaMode, JaTokenizer, UserDict}
+import graft.ja.{JaMode, JaTokenizer, UserDict}
 
 /** `tokenize_ja_neologd(line[, mode, stopWords, stopTags, userDict])`
   * → `array<string>` — Japanese morphological tokenization with the
@@ -24,8 +24,8 @@ import graft.ja.{DictEntry, JaMode, JaTokenizer, UserDict}
   *   - stopWords/stopTags: const array<string>; null → defaults, empty →
   *     no filtering (A4/A5)
   *   - userDict: const array<string> of CSV rows or const string URL
-  *     (A6/A7); the URL is fetched lazily on first evaluation per executor
-  *     (UDF:136–138), with the reference's transfer limits.
+  *     (A6/A7); the URL is fetched once per executor JVM, on first
+  *     evaluation there (UDF:136–138), with the reference's transfer limits.
   *
   * All optional arguments must be foldable (the reference's "const OI"
   * contract, UDF:93–111) — enforced at analysis time via
@@ -34,8 +34,8 @@ import graft.ja.{DictEntry, JaMode, JaTokenizer, UserDict}
   * generated UTF8String feeds `tokenizeRow` on a referenced instance of
   * this expression — no CodegenFallback wrapper, no per-row InternalRow
   * materialization or interpreted-tree dispatch (VERDICT r6 "Next round"
-  * #5). The heavy analyzer is built once per executor via @transient lazy
-  * (A8, UDF:82–83).
+  * #5). The heavy analyzer is built once per executor JVM per config
+  * (`JaTokenizer.shared`; A8, UDF:82–83).
   */
 case class TokenizeJaNeologd(children: Seq[Expression])
     extends Expression {
@@ -60,7 +60,10 @@ case class TokenizeJaNeologd(children: Seq[Expression])
             "(mode/stopWords/stopTags/userDict are compile-time constants)")
     }
     try {
-      resolveConfig() // eagerly validate mode string / user dict rows
+      // eagerly validate the mode string and user-dictionary rows
+      val (mode, _, _, rows, _) = config
+      JaMode.parse(mode)
+      if (rows != null) UserDict.parse(rows)
       TypeCheckSuccess
     } catch {
       case e: Exception => TypeCheckFailure(e.getMessage)
@@ -82,43 +85,34 @@ case class TokenizeJaNeologd(children: Seq[Expression])
     }
   }
 
-  /** (mode, stopWords, stopTags, userDictRows, userDictUrl) — resolved on
-    * the driver at analysis time; only the URL *fetch* is deferred.
+  /** (mode, stopWords, stopTags, userDictRows, userDictUrl): the raw
+    * constant arguments, read on the driver at analysis time; small and
+    * serializable. Null where the argument is absent or null.
     */
-  private def resolveConfig(): (JaMode, Set[String], Set[String], Seq[DictEntry], String) = {
-    val mode = JaMode.parse(if (children.size > 1) constString(1) else null)
+  private lazy val config: (String, Seq[String], Seq[String], Seq[String], String) = {
+    val mode = if (children.size > 1) constString(1) else null
     val sw = if (children.size > 2) constStringArray(2) else null
     val st = if (children.size > 3) constStringArray(3) else null
-    var rows: Seq[DictEntry] = Nil
+    var rows: Array[String] = null
     var url: String = null
     if (children.size > 4) {
       children(4).dataType match {
         case org.apache.spark.sql.types.NullType => () // void OI → no user dict (UDF:209)
         case StringType => url = constString(4)
-        case ArrayType(StringType, _) =>
-          val a = constStringArray(4)
-          if (a != null) rows = UserDict.parse(a.toSeq)
+        case ArrayType(StringType, _) => rows = constStringArray(4)
         case other => throw new IllegalArgumentException(
           "User dictionary MUST be given as an array of constant strings or a constant string (URL), " +
             s"got $other")
       }
     }
-    (mode,
-      if (sw == null) null else sw.map(_.toLowerCase).toSet,
-      if (st == null) null else st.toSet,
-      rows, url)
+    def seq(a: Array[String]): Seq[String] = if (a == null) null else a.toSeq
+    (mode, seq(sw), seq(st), seq(rows), url)
   }
 
-  // Resolved eagerly (driver side); small and serializable.
-  private lazy val config = resolveConfig()
-
-  /** Built lazily once per executor JVM; performs the user-dict URL fetch
-    * on first evaluation there (reference A7/A8 semantics).
-    */
+  /** The executor JVM's tokenizer for this config, looked up once per task. */
   @transient private lazy val tokenizer: JaTokenizer = {
     val (mode, sw, st, rows, url) = config
-    val ud = if (url != null) UserDict.fetch(url) else rows
-    new JaTokenizer(mode, sw, st, ud)
+    JaTokenizer.shared(mode, sw, st, rows, url)
   }
 
   @transient private lazy val versionArray: ArrayData =

@@ -1,5 +1,6 @@
 package graft.ja
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReferenceArray
 
 import scala.collection.mutable.ArrayBuffer
@@ -53,7 +54,7 @@ object JaMode {
   *   T7 ASCII lowercase
   *
   * Thread-safe and immutable after construction; build once per executor
-  * (@transient lazy, reference A8).
+  * per configuration through [[JaTokenizer.shared]] (reference A8).
   *
   * @param stopWords null → default set; empty → no stop-word filtering
   *                  (reference A4, UDF:194–204)
@@ -460,6 +461,39 @@ final class JaTokenizer(
 }
 
 object JaTokenizer {
+
+  /** Tokenizers built so far in this JVM, by the raw constant arguments of
+    * [[shared]]. Keyed on the strings, not on parsed `DictEntry`s: those hold
+    * an `Array`, so a key built from them compares by reference and misses
+    * in every task.
+    */
+  private val byConfig =
+    new ConcurrentHashMap[(String, Seq[String], Seq[String], Seq[String], String), JaTokenizer]()
+
+  /** The JVM's one tokenizer for a configuration, built on first use and
+    * then shared by every task and by both faces of the kernel
+    * (`tokenize_ja_neologd` and `ml.JaTokenizerTransformer`) — the
+    * reference's once-per-executor initialization (A8, UDF:82–83). A
+    * user-dictionary URL is fetched on that first use (A7, UDF:136–138).
+    *
+    * @param mode         mode string as given (null → NORMAL)
+    * @param stopWords    null → default set; empty → no stop-word filtering
+    * @param stopTags     null → default set; empty → no POS filtering
+    * @param userDictRows user-dictionary CSV rows, or null
+    * @param userDictUrl  URL to fetch the user-dictionary rows from, or null
+    */
+  def shared(mode: String, stopWords: Seq[String], stopTags: Seq[String],
+      userDictRows: Seq[String], userDictUrl: String): JaTokenizer =
+    byConfig.computeIfAbsent((mode, stopWords, stopTags, userDictRows, userDictUrl), _ =>
+      new JaTokenizer(JaMode.parse(mode),
+        if (stopWords == null) null else stopWords.toSet,
+        if (stopTags == null) null else stopTags.toSet,
+        if (userDictUrl != null) UserDict.fetch(userDictUrl)
+        else if (userDictRows != null) UserDict.parse(userDictRows)
+        else Nil))
+
+  /** Number of configurations [[shared]] has built a tokenizer for. */
+  private[graft] def sharedCount: Int = byConfig.size
 
   /** Per-thread lattice scratch: Viterbi state arrays, the region decode,
     * the per-class best predecessor, the trie match buffer and the

@@ -5,7 +5,7 @@ import org.apache.spark.ml.param.{Param, ParamValidators, StringArrayParam}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, Identifiable}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 
-import graft.ja.{JaMode, JaTokenizer}
+import graft.ja.JaTokenizer
 
 /** `spark.ml` pipeline stage for the NEologd Japanese tokenizer — the MLlib
   * face of the same kernel the SQL function `tokenize_ja_neologd` runs
@@ -16,7 +16,8 @@ import graft.ja.{JaMode, JaTokenizer}
   * Contract matches the SQL function (A3/A4/A5/A9): mode NORMAL/SEARCH/
   * EXTENDED, null stop overrides → reference defaults, empty array → no
   * filtering, null input row → null output. The analyzer is built lazily
-  * once per JVM per distinct config (the A8 per-executor-init contract —
+  * once per JVM per distinct config by `JaTokenizer.shared`, the cache the
+  * SQL function uses too (the A8 per-executor-init contract —
   * `createTransformFunc`'s closure captures only the plain config strings,
   * never the tokenizer, so the ~48 MiB expanded dictionary is heap-local to
   * each executor and the task binary stays small).
@@ -51,11 +52,11 @@ class JaTokenizerTransformer(override val uid: String)
     // capture ONLY plain serializable config; the tokenizer resolves
     // per-JVM on first use (A8)
     val m = $(mode)
-    val sw = if (isSet(stopWords)) $(stopWords) else null
-    val st = if (isSet(stopTags)) $(stopTags) else null
+    val sw = if (isSet(stopWords)) $(stopWords).toSeq else null
+    val st = if (isSet(stopTags)) $(stopTags).toSeq else null
     (s: String) =>
       if (s == null) null
-      else JaTokenizerTransformer.cached(m, sw, st).tokenize(s).toSeq
+      else JaTokenizer.shared(m, sw, st, null, null).tokenize(s).toSeq
   }
 
   override protected def validateInputType(inputType: DataType): Unit =
@@ -69,20 +70,4 @@ class JaTokenizerTransformer(override val uid: String)
 object JaTokenizerTransformer extends DefaultParamsReadable[JaTokenizerTransformer] {
 
   override def load(path: String): JaTokenizerTransformer = super.load(path)
-
-  /** Per-JVM analyzer cache keyed by config — one dictionary expansion per
-    * executor per distinct (mode, stops) tuple, shared across tasks.
-    */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String], Seq[String]), JaTokenizer]()
-
-  private[ml] def cached(mode: String, sw: Array[String], st: Array[String]): JaTokenizer = {
-    val key = (mode,
-      if (sw == null) null else sw.toSeq,
-      if (st == null) null else st.toSeq)
-    cache.computeIfAbsent(key, _ =>
-      new JaTokenizer(JaMode.parse(mode),
-        if (sw == null) null else sw.toSet,
-        if (st == null) null else st.toSet))
-  }
 }

@@ -94,17 +94,17 @@ object TokenizeOnceRewrite extends Rule[LogicalPlan] {
     // `a.join(b, size(tokenize(a.text)) === b.n).select(tokenize(a.text) …)`.
     // The measured plan keeps BOTH calls (the key evaluates once per stream
     // row, the projection once per OUTPUT row — at 1:N match fan-out the
-    // projection copy is the explode-class hazard). Measured 175.4 →
-    // 140.3 ms min-of-5 at 1:1 fan-out on the cached sf0.01 corpus
-    // (TokenizeOnceBench round-18). Rewrite: materialize
+    // projection copy is the explode-class hazard). In round 18 a hand
+    // A/B timer, since retired, measured 175.4 → 140.3 ms min-of-5 at 1:1
+    // fan-out on the cached sf0.01 corpus. Rewrite: materialize
     // below the join on the side the call binds to, pruned to the columns
     // the new projection/condition still need (this rule runs AFTER column
     // pruning, so prune here). The fourth audited shape —
     // Aggregate(tokenize)/Project(tokenize) — is a measured NEGATIVE:
     // Catalyst already materializes the grouping expression in an injected
     // Project and codegen subexpression elimination covers the aggregate
-    // input (TokenizeOnceBench round-18: dup 196.6 ms vs staged 183.3 ms
-    // min-of-5, within noise), so no Aggregate case exists here.
+    // input (round 18: dup 196.6 ms vs staged 183.3 ms min-of-5, within
+    // noise), so no Aggregate case exists here.
     case JoinProjectDup(projList, j, tok) =>
       val alias = Alias(tok, "_graft_toks")()
       val newCond = j.condition.get.transform {

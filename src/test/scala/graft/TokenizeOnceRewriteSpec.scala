@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * generator and a scalar consumer, the call must be evaluated once per
   * input row (materialized below Generate) instead of once per exploded
   * row. Plan rewrite proof, result identity through both API shapes, and
-  * non-firing guards. Measured 857 → 166 ms on the cached sf0.01
-  * documents hazard shape (graft.tools.TokenizeOnceBench, min of 5;
-  * re-measured 582 → 149 ms r17 after the unrequiredChildIndex fix).
+  * non-firing guards. In rounds 16–17 a hand A/B timer, since retired,
+  * measured 857 → 166 ms on the cached sf0.01 documents hazard shape (min
+  * of 5; 582 → 149 ms after the r17 unrequiredChildIndex fix).
   * Round 17 added the Filter/Project second shape — the same call in the
   * predicate and the projection, which codegen cannot CSE across
   * operators: measured 198 → 148 ms min-of-5 on the same corpus.

@@ -19,6 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class UserDictHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val csv = "クロモジ,クロモジ,クロモジ,カスタム名詞\n# comment\n"
+  private val countedHits = new java.util.concurrent.atomic.AtomicInteger()
 
   private var server: HttpServer = _
   private def base: String = s"http://127.0.0.1:${server.getAddress.getPort}"
@@ -46,6 +47,10 @@ class UserDictHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     server.createContext("/gzipped.csv", (ex: HttpExchange) =>
       respond(ex, 200, gzipBytes(csv.getBytes(StandardCharsets.UTF_8)),
         Map("Content-Encoding" -> "gzip")))
+    server.createContext("/counted.csv", (ex: HttpExchange) => {
+      countedHits.incrementAndGet()
+      respond(ex, 200, csv.getBytes(StandardCharsets.UTF_8))
+    })
     server.createContext("/missing.csv", (ex: HttpExchange) =>
       respond(ex, 404, Array.emptyByteArray))
     // ~33 MiB of commented-out lines, gzip-compressed to a few hundred KiB:
@@ -87,5 +92,18 @@ class UserDictHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("malformed UTF-8 bytes are rejected, not replaced") {
     intercept[java.nio.charset.CharacterCodingException](
       UserDict.fetch(s"$base/bad-utf8.csv"))
+  }
+
+  test("a user-dictionary URL is fetched once per JVM, across tasks and queries") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val lines = (1 to 32).map(i => s"クロモジを使う。$i").toDF("text").repartition(8)
+    def tokens = lines.select(graft.functions.tokenize_ja_neologd_url(
+      org.apache.spark.sql.functions.col("text"), null, null, null, s"$base/counted.csv"))
+      .collect().map(_.getSeq[String](0))
+    assert(tokens.forall(_.head == "クロモジ"))
+    assert(countedHits.get == 1)
+    tokens
+    assert(countedHits.get == 1, "a second query fetches nothing")
   }
 }
