@@ -9,9 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver benchmark contract: time the SparkEntry queries (all, or the exact
   * names in SPARK_GRAFT_ONLY) on SPARK_GRAFT_SF_DIR and print, on stdout, one
   * JSON line per query — min wall time over the reps, rep spread, and the
-  * work counters of the reported rep — then one `total_summary` line, which
-  * stays last. Writes no file. Timing excludes JVM/session warmup (one
-  * throwaway query first).
+  * work counters of the reported rep, with the jobs run while the query's
+  * DataFrame was built apart — then one `total_summary` line, which stays
+  * last. Writes no file. Timing excludes JVM/session warmup (one throwaway
+  * query first).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -25,35 +26,39 @@ object Bench {
     // Full materialization via the noop sink: count() would let Catalyst
     // prune projections and drop terminal sorts, timing a fraction of the
     // real work. noop executes every expression and discards rows.
-    def run(fn: (SparkSession, String) => DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    def write(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
     // JVM/codegen/parquet-footer warmup — a dedicated query OUTSIDE the
     // timed suite (VERDICT r8 #7: warming up with q01 double-JITs it and
     // flatters its own number). Touches the three big tables so footer
     // reads, codegen, and the shuffle machinery are all hot.
-    run((s, dir) => {
+    write {
       import org.apache.spark.sql.functions._
-      val li = graft.queries.Tables.t(s, dir, "lineitem")
+      val li = graft.queries.Tables.t(spark, sfDir, "lineitem")
         .groupBy("l_linestatus").agg(sum("l_quantity").as("wq"))
-      val ev = graft.queries.Tables.t(s, dir, "events")
+      val ev = graft.queries.Tables.t(spark, sfDir, "events")
         .groupBy("event_type").agg(count(lit(1)).as("wn"))
-      val dc = graft.queries.Tables.t(s, dir, "documents")
+      val dc = graft.queries.Tables.t(spark, sfDir, "documents")
         .select(length(col("text")).as("wl")).agg(sum("wl").as("wt"))
       li.crossJoin(ev.limit(1)).crossJoin(dc)
-    })
+    }
     val queries = SparkEntry.queries
     // min of the reps per query: this host shows up to 2x run-to-run noise
     // (see PLANS.md); min is the standard estimator for intrinsic cost.
-    // Each rep runs under its own job group, set before the query's
+    // Each rep runs under two job groups: `<rep>:build` while the query's
     // DataFrame is built, so the jobs an operator runs while it builds
-    // count toward its query.
+    // count toward its query, and `<rep>:run` while it is written.
     val timed = names.map { name =>
       var error = ""
       def rep(i: Int): Option[(Double, String)] = {
         val group = s"bench:$name#$i"
-        sc.setJobGroup(group, name, interruptOnCancel = false)
         val t0 = System.nanoTime()
-        try { run(queries(name)); Some((System.nanoTime() - t0) / 1e9 -> group) }
+        try {
+          sc.setJobGroup(s"$group:build", name, interruptOnCancel = false)
+          val df = queries(name)(spark, sfDir)
+          sc.setJobGroup(s"$group:run", name, interruptOnCancel = false)
+          write(df)
+          Some((System.nanoTime() - t0) / 1e9 -> group)
+        }
         catch { case e: Throwable =>
           error = s"${e.getClass.getSimpleName}: ${e.getMessage}"
           System.err.println(s"[bench] $name failed: $error")
@@ -74,14 +79,18 @@ object Bench {
     // One drain for the whole run: the listener bus delivers events
     // asynchronously, and every job has ended by now.
     GraftSparkBridge.drainListeners(sc)
+    def queryRun(name: String, wall: Double, spread: Double, group: String, error: String) = {
+      val build = counters(s"$group:build")
+      QueryRun(name, wall, spread, build + counters(s"$group:run"), build.jobs, error)
+    }
     val results = timed.map { case (name, times, error) =>
-      if (times.isEmpty) QueryRun(name, -1.0, -1.0, counters(s"bench:$name#$reps"), error)
+      if (times.isEmpty) queryRun(name, -1.0, -1.0, s"bench:$name#$reps", error)
       else {
         val (wall, group) = times.minBy(_._1)
         // max/min spread per query: on an idle host this sits near 1; a
         // contended sandbox (the r8 artifact) shows 5-40x swings.
         val spread = if (times.length >= 2 && wall > 0) times.map(_._1).max / wall else -1.0
-        QueryRun(name, wall, spread, counters(group), "")
+        queryRun(name, wall, spread, group, "")
       }
     }
     results.foreach(r => println(queryLine(r)))
@@ -132,9 +141,11 @@ object Bench {
 
   /** One query's result: min wall seconds (-1 when every rep failed), max/min
     * rep spread (-1 with fewer than two successful reps), the reported rep's
-    * work, and the last error ("" on success).
+    * work (building and running), how many of its jobs ran while the query's
+    * DataFrame was built, and the last error ("" on success).
     */
-  final case class QueryRun(query: String, wallS: Double, spread: Double, work: Work, error: String)
+  final case class QueryRun(query: String, wallS: Double, spread: Double, work: Work,
+      buildJobs: Long, error: String)
 
   // %f through the f-interpolator is locale-sensitive (comma decimals under
   // de_DE would corrupt the JSON); route all fixed-point formatting through
@@ -174,7 +185,8 @@ object Bench {
         ",\"error\":" + jsonString(r.error.substring(0, end))
       }
     s"""{"kind":"query","query":${jsonString(r.query)},"wall_s":${fmt(r.wallS, 4)},""" +
-      s""""spread":${fmt(r.spread)},"jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},""" +
+      s""""spread":${fmt(r.spread)},"jobs":${w.jobs},"build_jobs":${r.buildJobs},""" +
+      s""""stages":${w.stages},"tasks":${w.tasks},""" +
       s""""cpu_s":${fmt(w.cpuNs / 1e9)},"shuffle_mb":${fmt(w.shuffleBytes / 1e6)},""" +
       s""""input_mb":${fmt(w.inputBytes / 1e6)}$error}"""
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.expr.TokenizeJaNeologd
 
@@ -85,6 +87,10 @@ object Graft {
     "l2_normalize" -> (exprs =>
       graft.expr.L2Normalize(arity("l2_normalize", 1)(exprs).head)))
 
+  /** The optimizer rules both installers add, in order. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.rules.TokenCountRewrite, graft.rules.TokenizeOnceRewrite, graft.rules.LocalSortFold)
+
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
@@ -92,12 +98,9 @@ object Graft {
     }
     // optimizer rules for an already-built session (the extensions path
     // injects them at build time); idempotent across repeated register calls
-    if (!spark.experimental.extraOptimizations.contains(graft.rules.TokenCountRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.rules.TokenCountRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.rules.TokenizeOnceRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.rules.TokenizeOnceRewrite
+    val installed = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      installed ++ optimizerRules.filterNot(installed.contains)
   }
 }
 
@@ -112,7 +115,6 @@ class GraftSessionExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.expr", name),
         builder))
     }
-    ext.injectOptimizerRule(_ => graft.rules.TokenCountRewrite)
-    ext.injectOptimizerRule(_ => graft.rules.TokenizeOnceRewrite)
+    Graft.optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
   }
 }

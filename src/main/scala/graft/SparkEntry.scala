@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{Pipeline, Relational, Q}
+import graft.queries.{Pipeline, Q, Relational, Tables}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -24,7 +24,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
     Graft.register(spark)
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    Tables.file(spark, "/root/testdata/sf0.001/documents.parquet")
       .select(explode(graft.functions.tokenize_ja_neologd(col("text"))).as("token"))
       .groupBy("token").count()
       .orderBy(desc("count"), asc("token"))

@@ -45,10 +45,6 @@ final class AcAutomaton(val patterns: Array[String]) extends Serializable {
   private val fail: Array[Int] = frozen.fail
   private val outFrozen: Array[Array[Int]] = frozen.out
 
-  /** Node count / edge count — the frozen-size diagnostics AcBench reports. */
-  def nodeCount: Int = gotoKeys.length
-  def edgeCount: Long = { var s = 0L; var i = 0; while (i < gotoKeys.length) { s += gotoKeys(i).length; i += 1 }; s }
-
   /** goto(node, c): target node or -1 — direct root row, binary search elsewhere. */
   @inline private def step(node: Int, c: Char): Int =
     if (node == 0) rootNext(c)
@@ -68,7 +64,7 @@ final class AcAutomaton(val patterns: Array[String]) extends Serializable {
 
   /** Distinct matched pattern ids, ascending.
     *
-    * Two accumulators by list size (AcBench, round 17): a BitSet costs
+    * Two accumulators by list size (measured in round 17): a BitSet costs
     * O(P/8) bytes of allocation+zeroing AND an O(P/64) harvest walk PER
     * ROW — at 10⁶ patterns that is 125 KiB zeroed per 2 KiB document, and
     * it dominated the scan (measured 1.7 MB/s). Small lists (≤ 4096) keep

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 
 /** One verifiable query: Spark implementation + (optionally) the exact
   * equivalent ANSI SQL the driver runs in DuckDB over the same parquet
@@ -21,6 +22,11 @@ object Q {
 object Tables {
   /** All driver tables are single parquet files under the sf dir.
     *
+    * Each read takes its schema from the file's parquet footer, read on the
+    * driver ([[file]]), so building a query starts no Spark job. Nothing is
+    * cached: every call reads the footer again under the session conf of
+    * that moment. A directory (a multi-file table) fails, naming the path.
+    *
     * `events.ts` has shipped as both INT64 TIMESTAMP(NANOS) and native
     * `timestamp[us]` across testdata generations, so the read is
     * schema-adaptive:
@@ -40,7 +46,7 @@ object Tables {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(path)
+      val df = file(spark, path)
       df.schema("ts").dataType match {
         case LongType         => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
@@ -53,8 +59,15 @@ object Tables {
             s"events.ts read as unsupported type $other from $path — " +
             "expected INT64-NANOS (LongType under nanosAsLong), TIMESTAMP_NTZ, or TIMESTAMP")
       }
-    } else spark.read.parquet(path)
+    } else file(spark, path)
   }
+
+  /** One parquet file, read with the schema of its footer: the footer is
+    * read and converted on the driver as Spark's own schema inference
+    * converts it, without the one-task inference job. Fails on a directory.
+    */
+  private[graft] def file(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(GraftParquetBridge.footerSchema(spark, path)).parquet(path)
 
   /** Exact decimal view of a 2-dp double column: makes SUM/ordering
     * deterministic and bit-identical across Spark and DuckDB (double

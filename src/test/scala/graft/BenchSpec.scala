@@ -25,19 +25,21 @@ class BenchSpec extends AnyFunSuite {
     Locale.setDefault(Locale.GERMANY)
     try {
       val runs = Seq(
-        QueryRun("q01_a", 1.23456, 1.5, work, ""),
-        QueryRun("q02_b", -1.0, -1.0, Work(), "IllegalStateException: boom"),
-        QueryRun("q62_version_call", 0.0216, 1.1, Work(), ""))
+        QueryRun("q01_a", 1.23456, 1.5, work, 1, ""),
+        QueryRun("q02_b", -1.0, -1.0, Work(), 0, "IllegalStateException: boom"),
+        QueryRun("q62_version_call", 0.0216, 1.1, Work(), 0, ""))
       val q = json.readTree(Bench.queryLine(runs.head))
       assert(q.get("kind").asText == "query" && q.get("query").asText == "q01_a")
       assert(q.get("wall_s").asDouble == 1.2346 && q.get("spread").asDouble == 1.5)
       assert(q.get("jobs").asLong == 3 && q.get("stages").asLong == 4 && q.get("tasks").asLong == 12)
+      assert(q.get("build_jobs").asLong == 1, "jobs run while the DataFrame was built")
       assert(q.get("cpu_s").asDouble == 1.235 && q.get("shuffle_mb").asDouble == 2.5 &&
         q.get("input_mb").asDouble == 7.5)
       assert(!q.has("error"))
       val failed = json.readTree(Bench.queryLine(runs(1)))
       assert(failed.get("wall_s").asDouble == -1.0)
       assert(failed.get("error").asText == "IllegalStateException: boom")
+      assert(failed.get("build_jobs").asLong == 0)
       val s = json.readTree(Bench.summaryLine(runs, "/data/sf0.1"))
       val fields = Seq("metric", "value", "unit", "n", "fails", "median_rep_spread",
         "version_call_floor_sec", "cheap5_floor_sec", "sf")
@@ -55,7 +57,7 @@ class BenchSpec extends AnyFunSuite {
     // worst case per char once escaped: control chars (6 bytes), quotes and
     // backslashes (2), three-byte UTF-8 and surrogate pairs
     val error = ("\u0001\"\\語😀" * 2100).take(10240)
-    val line = Bench.queryLine(QueryRun(name, -1.0, -1.0, work, error))
+    val line = Bench.queryLine(QueryRun(name, -1.0, -1.0, work, work.jobs, error))
     assert(line.getBytes(StandardCharsets.UTF_8).length < 4096)
     val q = json.readTree(line)
     assert(q.get("query").asText == name)

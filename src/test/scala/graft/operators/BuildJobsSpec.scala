@@ -1,36 +1,19 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.GraftTestBridge.drainListeners
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.jobs
 
 /** The Spark jobs an iterative operator starts while it builds its result,
   * and that collecting the result starts: the learners run one job per
   * step while building and return local relations, so the collect runs
-  * none. The bounds may only shrink.
+  * none, sorted or not. The bounds may only shrink.
   */
 class BuildJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** Jobs started while `f` runs, every listener event delivered. */
-  private def jobs[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    drainListeners(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      drainListeners(sc)
-      (r, n.get())
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def docs = (1 to 40).map(i => Seq("low", "lower", "newest", "widest", s"w$i")
     .take(1 + i % 5).mkString(" ")).toDF("text")
@@ -52,5 +35,13 @@ class BuildJobsSpec extends AnyFunSuite {
       assert(rows.nonEmpty, s"$name: the fixture must produce rows")
       assert(collectJobs == 0, s"$name: $collectJobs jobs to collect")
     }
+  }
+
+  test("ordering a learner's local report starts no job: the sort folds on the driver") {
+    val (df, _) = jobs(TextAnalysis.unigramLmEm(docs, "text"))
+    val (rows, sortJobs) = jobs(df.orderBy("piece").collect())
+    assert(rows.nonEmpty)
+    assert(rows.map(_.getString(0)).toSeq == rows.map(_.getString(0)).toSeq.sorted)
+    assert(sortJobs == 0, s"$sortJobs jobs to sort and collect")
   }
 }
