@@ -84,13 +84,14 @@ rm -rf /tmp/graft_ci_vout
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_ci_vout"
 python3 scripts/check.py /root/testdata/sf0.01 /tmp/graft_ci_vout
 
-echo "== correctness vs DuckDB oracle at 2 partitions: the iterative operators"
+echo "== correctness vs DuckDB oracle at 2 partitions: the iterative operators, LSH and PageRank"
 # The one-job-per-step learners (unigram LM, kCenterGreedy) and mmrDiversify
-# fold per-partition results on the driver; the full Verify above runs them
-# at the default core count, this pass at 2, so each is oracle-checked at
-# two partition counts.
+# fold per-partition results on the driver; the MinHash-LSH self-join
+# (q32) and the PageRank loop (q131, q138) sum and join across shuffles.
+# The full Verify above runs them at the default core count, this pass at
+# 2, so each is oracle-checked at two partition counts.
 rm -rf /tmp/graft_ci_vout2
-SPARK_GRAFT_CPUS=2 SPARK_GRAFT_ONLY=q141_mmr_diversify,q159_kcenter_coreset,q218_unigram_lm_vocab,q220_unigram_lm_em,q223_unigram_lm_train,q226_unigram_fertility,q231_unigram_lm_soft_em,q234_unigram_lm_train_soft \
+SPARK_GRAFT_CPUS=2 SPARK_GRAFT_ONLY=q32_neardup_minhash_lsh,q131_pagerank_hosts,q138_personalized_pagerank,q141_mmr_diversify,q159_kcenter_coreset,q218_unigram_lm_vocab,q220_unigram_lm_em,q223_unigram_lm_train,q226_unigram_fertility,q231_unigram_lm_soft_em,q234_unigram_lm_train_soft \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_ci_vout2"
 python3 scripts/check.py /root/testdata/sf0.01 /tmp/graft_ci_vout2
 

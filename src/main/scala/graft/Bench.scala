@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver benchmark contract: time the SparkEntry queries (all, or the exact
   * names in SPARK_GRAFT_ONLY) on SPARK_GRAFT_SF_DIR and print, on stdout, one
-  * JSON line per query — min wall time over the reps, rep spread, and the
-  * work counters of the reported rep, with the jobs run while the query's
+  * JSON line per query — min wall time over the reps and the work counters
+  * of the reported rep, with the jobs run while the query's
   * DataFrame was built apart — then one `total_summary` line, which stays
   * last. Writes no file. Timing excludes JVM/session warmup (one throwaway
   * query first).
@@ -65,32 +65,20 @@ object Bench {
           None
         } finally sc.clearJobGroup()
       }
-      val base = (1 to reps).flatMap(rep)
-      // Adaptive third rep (VERDICT r16 #8): the r16 bursty artifact's
-      // 10-20x per-query inflations were SINGLE-REP outliers — when the
-      // two base reps disagree the min is untrustworthy, so exactly the
-      // noisy queries pay one more rep (an idle host pays ~nothing; a
-      // uniform reps=3 would cost +50% driver wall-clock everywhere).
-      val times =
-        if (base.length >= 2 && needsExtraRep(base.map(_._1))) base ++ rep(reps + 1)
-        else base
-      (name, times, error)
+      ((name, (1 to reps).flatMap(rep), error))
     }
     // One drain for the whole run: the listener bus delivers events
     // asynchronously, and every job has ended by now.
     GraftSparkBridge.drainListeners(sc)
-    def queryRun(name: String, wall: Double, spread: Double, group: String, error: String) = {
+    def queryRun(name: String, wall: Double, group: String, error: String) = {
       val build = counters(s"$group:build")
-      QueryRun(name, wall, spread, build + counters(s"$group:run"), build.jobs, error)
+      QueryRun(name, wall, build + counters(s"$group:run"), build.jobs, error)
     }
     val results = timed.map { case (name, times, error) =>
-      if (times.isEmpty) queryRun(name, -1.0, -1.0, s"bench:$name#$reps", error)
+      if (times.isEmpty) queryRun(name, -1.0, s"bench:$name#$reps", error)
       else {
         val (wall, group) = times.minBy(_._1)
-        // max/min spread per query: on an idle host this sits near 1; a
-        // contended sandbox (the r8 artifact) shows 5-40x swings.
-        val spread = if (times.length >= 2 && wall > 0) times.map(_._1).max / wall else -1.0
-        queryRun(name, wall, spread, group, "")
+        queryRun(name, wall, group, "")
       }
     }
     results.foreach(r => println(queryLine(r)))
@@ -139,12 +127,12 @@ object Bench {
     }
   }
 
-  /** One query's result: min wall seconds (-1 when every rep failed), max/min
-    * rep spread (-1 with fewer than two successful reps), the reported rep's
-    * work (building and running), how many of its jobs ran while the query's
-    * DataFrame was built, and the last error ("" on success).
+  /** One query's result: min wall seconds (-1 when every rep failed), the
+    * reported rep's work (building and running), how many of its jobs ran
+    * while the query's DataFrame was built, and the last error ("" on
+    * success).
     */
-  final case class QueryRun(query: String, wallS: Double, spread: Double, work: Work,
+  final case class QueryRun(query: String, wallS: Double, work: Work,
       buildJobs: Long, error: String)
 
   // %f through the f-interpolator is locale-sensitive (comma decimals under
@@ -185,7 +173,7 @@ object Bench {
         ",\"error\":" + jsonString(r.error.substring(0, end))
       }
     s"""{"kind":"query","query":${jsonString(r.query)},"wall_s":${fmt(r.wallS, 4)},""" +
-      s""""spread":${fmt(r.spread)},"jobs":${w.jobs},"build_jobs":${r.buildJobs},""" +
+      s""""jobs":${w.jobs},"build_jobs":${r.buildJobs},""" +
       s""""stages":${w.stages},"tasks":${w.tasks},""" +
       s""""cpu_s":${fmt(w.cpuNs / 1e9)},"shuffle_mb":${fmt(w.shuffleBytes / 1e6)},""" +
       s""""input_mb":${fmt(w.inputBytes / 1e6)}$error}"""
@@ -198,9 +186,6 @@ object Bench {
     val walls = results.map(_.wallS)
     val total = walls.filter(_ >= 0).sum
     val fails = walls.count(_ < 0)
-    // median_rep_spread near 1 = idle host; >2 = contended, don't trust.
-    val spreads = results.map(_.spread).filter(_ >= 0).sorted
-    val medianSpread = if (spreads.isEmpty) -1.0 else spreads(spreads.length / 2)
     // Contention canary (VERDICT r14 #3): q62's zero-arg version call does
     // no data work — clean hosts run it in ~0.02 s, and any inflation is
     // plan-independent ambient load, 1:1.
@@ -217,16 +202,8 @@ object Bench {
       if (ok.length < 5) -1.0 else ok.last
     }
     s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${results.size},""" +
-      s""""fails":$fails,"median_rep_spread":${fmt(medianSpread)},""" +
+      s""""fails":$fails,""" +
       s""""version_call_floor_sec":${fmt(versionFloor)},"cheap5_floor_sec":${fmt(cheapFloor5)},""" +
       s""""sf":${jsonString(sfDir)}}"""
   }
-
-  /** A third rep is warranted when the base reps disagree by over 1.5x
-    * AND the query is non-trivial (min >= 0.1 s — sub-100ms queries jitter
-    * past 1.5x on JIT/GC noise alone and their absolute error is
-    * harmless): the min of two discordant reps may itself be the outlier.
-    */
-  def needsExtraRep(times: Seq[Double]): Boolean =
-    times.min >= 0.1 && times.max / times.min > 1.5
 }

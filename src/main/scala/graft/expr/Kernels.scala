@@ -25,8 +25,8 @@ object Kernels {
     * Unicode code points: total count, distinct count, and the Simpson
     * collision numerator Σ cᵢ·(cᵢ−1) — the exact count of ordered repeated
     * pairs, the log-free diversity surrogate for a character-entropy
-    * gibberish gate (libm `ln` bits differ across engines — the
-    * TextAnalysis.tfIdfLog house rule — so Shannon entropy cannot sit on
+    * gibberish gate (libm `ln` bits differ across engines — the no-libm
+    * rule — so Shannon entropy cannot sit on
     * the exact-hash gate; collision probability ranks the same pathologies:
     * low-diversity junk high, natural text mid, uniform noise low). One
     * char pass + one bounded map iteration; all exact longs.

@@ -24,15 +24,16 @@ import org.apache.spark.sql.functions._
   * No operator caches a frame in the session: once a result is consumed,
   * the CacheManager holds no entry from it. Several operators read their
   * input more than once (the two sides of a self-join, the verification
-  * join back to the shingles, both blocking passes), and every read
+  * join back to the shingle hashes, both blocking passes), and every read
   * recomputes it, so the input must be deterministic: no `rand`, `uuid`
   * or `monotonically_increasing_id` in its plan. Where two reads plan to
   * the same exchange, AQE's stage reuse runs it once.
   */
 object Dedup {
 
-  /** Deterministic polynomial hash constants (mirrored in DuckDB oracles). */
-  final val P = 1000000007L
+  /** MinHash permutation constants, mod P = 1e9+7 (mirrored in DuckDB
+    * oracles).
+    */
   def hashA(i: Int): Long = 1103L * i + 12289L
   def hashB(i: Int): Long = 24593L * i + 786433L
 
@@ -222,63 +223,55 @@ object Dedup {
         (col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter"))).as("jaccard"))
   }
 
-  /** MinHash signatures: one row per doc, columns m0..m{n-1} where
-    * m_i = min over shingles of (a_i·h + b_i) mod P. Computed as n
-    * min-aggregates in a single hash aggregation (partial map-side combine
-    * ⇒ the shuffle carries |docs|·n longs, independent of shingle count).
+  /** The LSH band values of each document: (id, j, bval), one row per band
+    * j in [0, bands). One fused `minhash_bands` kernel call per row
+    * (graft.expr.MinhashBands: shingle → permute → min → band in a single
+    * pass): shingle hashes as in [[hashedShingles]], signature mins over
+    * the (hashA(i)·h + hashB(i)) mod 1e9+7 permutations, and each band folds
+    * r = numHashes/bands consecutive mins with (acc·131 + m) mod 1e9+7. A document
+    * with fewer than k tokens, or a null text, has no shingles and so no
+    * band rows: it can never band-collide. `id` keeps the type of `idCol`.
     */
-  def minhashSignatures(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int, numHashes: Int): DataFrame =
-    minhashFromHashed(hashedShingles(df, idCol, textCol, k), numHashes)
+  private[operators] def minhashBandRows(df: DataFrame, idCol: String, textCol: String,
+      k: Int, numHashes: Int, bands: Int): DataFrame =
+    df.select(col(idCol).as("id"), minhashSummary(col(textCol), k, numHashes, bands).as("ms"))
+      .select(col("id"), posexplode(slice(col("ms"), 2, bands)).as(Seq("j", "bval")))
 
-  private[graft] def minhashFromHashed(hs: DataFrame, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map { i =>
-      min((lit(hashA(i)) * col("h") + lit(hashB(i))) % P).as(s"m$i")
-    }
-    hs.groupBy(col("id")).agg(aggs.head, aggs.drop(1): _*)
+  /** `[n_distinct_shingles, band_0, …]` of a text (see [[minhashBandRows]]). */
+  private[operators] def minhashSummary(text: Column, k: Int, numHashes: Int,
+      bands: Int): Column = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    graft.functions.minhash_bands(text, k,
+      (0 until numHashes).map(hashA), (0 until numHashes).map(hashB), bands)
   }
 
   /** LSH banding over MinHash signatures → candidate pairs → exact Jaccard
     * verification. bands×rowsPerBand must equal numHashes. Candidates join
-    * on (band index, band hash): only docs agreeing on an entire band meet,
-    * which is the sub-quadratic path at scale; the exact verification join
-    * then touches candidate docs only.
+    * on (band index, band value) of [[minhashBandRows]]: only docs agreeing
+    * on an entire band meet, which is the sub-quadratic path at scale. The
+    * verification then joins each candidate pair to the two documents'
+    * distinct shingle-hash arrays and intersects them in-row, so no
+    * shingle is ever exploded or shuffled on its own. `idCol` must be a
+    * key: each id names one document.
     */
   def lshNearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 6, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sh = hashedShingles(df, idCol, textCol, k)
-    val sigs = minhashFromHashed(sh, numHashes)
-    def bandHash(j: Int): Column =
-      (0 until r).foldLeft(lit(0L)) { (acc, i) =>
-        (acc * 131 + col(s"m${j * r + i}")) % P
-      }
-    val bandStructs = array((0 until bands).map { j =>
-      struct(lit(j).as("bidx"), bandHash(j).as("bval"))
-    }: _*)
-    val bandsDf = sigs.select(col("id"), explode(bandStructs).as("band"))
-      .select(col("id"), col("band.bidx").as("bidx"), col("band.bval").as("bval"))
-    val cand = bandsDf.as("x").join(bandsDf.as("y"),
-        col("x.bidx") === col("y.bidx") && col("x.bval") === col("y.bval")
+    val bandRows = minhashBandRows(df, idCol, textCol, k, numHashes, bands)
+    val cand = bandRows.as("x").join(bandRows.as("y"),
+        col("x.j") === col("y.j") && col("x.bval") === col("y.bval")
           && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    // exact verification restricted to candidates (hashed-shingle keyed)
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
-    val shared = cand
-      .join(sh.select(col("id").as("id_a"), col("h")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("h").as("h_b")), Seq("id_b"))
-      .where(col("h") === col("h_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("n_b")), Seq("id_b"))
-      .withColumn("jaccard", col("shared") / (col("n_a") + col("n_b") - col("shared")))
+    val hs = df.select(col(idCol).as("id"),
+      array_distinct(graft.functions.shingle_hashes(col(textCol), k)).as("hs"))
+    cand
+      .join(hs.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
+      .join(hs.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
+      .withColumn("shared", size(array_intersect(col("hs_a"), col("hs_b"))))
+      .withColumn("jaccard",
+        col("shared") / (size(col("hs_a")) + size(col("hs_b")) - col("shared")))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
@@ -293,9 +286,6 @@ object Dedup {
   def simhash(df: DataFrame, idCol: String, textCol: String, bits: Int = 30): DataFrame =
     df.select(col(idCol).as("id"),
       graft.functions.simhash64(col(textCol), bits).as("simhash"))
-
-  /** Hamming distance between two simhash signatures (bit_count of XOR). */
-  def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Connected components over an undirected edge list — the cluster-
     * formation step between near-duplicate PAIRS (LSH / n-gram / SimHash

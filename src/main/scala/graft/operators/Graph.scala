@@ -55,53 +55,9 @@ object Graph {
     */
   def pageRankInt(edges: DataFrame, iters: Int, topK: Int,
       scale: Long = 1000000L, dampNum: Long = 85L, dampDen: Long = 100L)
-      : DataFrame = {
-    require(iters >= 1, "pageRankInt: iters must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "pageRankInt: 0 < damp < 1")
-    // hash-partition on src BEFORE the checkpoint: LogicalRDD preserves
-    // the physical partitioning, so none of the `iters` join stages has to
-    // re-exchange the edge side — only the tiny rank table moves per hop
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .repartition(col("src")).localCheckpoint()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // Node universe = sources ∪ sinks (pure sinks still hold rank mass),
-    // with each node's outdeg folded in ONCE — the iteration then needs a
-    // single equi-join per hop instead of two. Checkpointed: one (long,
-    // long) row per node, and every iteration's lineage restarts here
-    // instead of replaying the union/distinct.
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"))
-      .localCheckpoint()
-    val base = scale - scale * dampNum / dampDen
-    var pr = nodes.withColumn("pr", lit(scale))
-    for (i <- 1 to iters) {
-      // per-edge contribution computed on the NODE side before the join —
-      // one divide per node, not per edge; outdeg 0 rows yield null but
-      // never match (a node with no out-edges joins no e.src)
-      val contrib = e
-        .join(pr.select(col("node").as("src"),
-          expr("pr div outdeg").as("c")), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum(col("c")).as("s"))
-      pr = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"), col("outdeg"),
-          (lit(base) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
-            .as("pr"))
-      // lineage guard (VERDICT r11 #5): the rank plan otherwise grows
-      // linearly with iters and user-controlled depth (iters >= ~30) pays
-      // analyzer/optimizer blowup. Every 8 hops the rank table — one
-      // small (node, outdeg, pr) row per node — re-roots at a LogicalRDD,
-      // the dedupClusters checkpoint cadence. Default depths (<= 8) never
-      // hit this branch, so the pinned q131/q138 plans are unchanged.
-      if (i % 8 == 0 && i < iters) pr = pr.localCheckpoint()
-    }
-    val top = pr.orderBy(col("pr").desc, col("node")).limit(topK)
-    top.withColumn("rn",
-        row_number().over(Window.orderBy(col("pr").desc, col("node"))))
+      : DataFrame =
+    seededPageRank(edges, None, iters, topK, scale, dampNum, dampDen)
       .select(col("node"), col("pr"), col("rn"))
-  }
 
   /** Personalized PageRank (Haveliwala, WWW 2002): identical recurrence to
     * [[pageRankInt]] except the teleport mass lands ONLY on the seed set —
@@ -114,19 +70,42 @@ object Graph {
     */
   def personalizedPageRankInt(edges: DataFrame, seeds: DataFrame, iters: Int,
       topK: Int, scale: Long = 1000000L, dampNum: Long = 85L,
-      dampDen: Long = 100L): DataFrame = {
-    require(iters >= 1, "personalizedPageRankInt: iters must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "personalizedPageRankInt: 0 < damp < 1")
+      dampDen: Long = 100L): DataFrame =
+    seededPageRank(edges, Some(seeds), iters, topK, scale, dampNum, dampDen)
+
+  /** The one PageRank loop: (node, pr, is_seed, rn), top `topK` by pr with
+    * pr > 0. `seeds = None` makes every node a seed, which is plain
+    * PageRank: then pr₀ = scale and every hop adds base, and base =
+    * scale − scale·dampNum div dampDen ≥ 1, so the pr > 0 filter removes
+    * nothing.
+    */
+  private def seededPageRank(edges: DataFrame, seeds: Option[DataFrame],
+      iters: Int, topK: Int, scale: Long, dampNum: Long, dampDen: Long): DataFrame = {
+    require(iters >= 1, "PageRank: iters must be >= 1")
+    require(dampNum > 0 && dampNum < dampDen, "PageRank: 0 < damp < 1")
+    // hash-partition on src BEFORE the checkpoint: LogicalRDD preserves
+    // the physical partitioning, so none of the `iters` join stages has to
+    // re-exchange the edge side — only the tiny rank table moves per hop
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
       .repartition(col("src")).localCheckpoint()
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val seed = seeds.select(col("node").cast("long").as("node"))
-      .distinct().withColumn("is_seed", lit(true))
-    val nodes = e.select(col("src").as("node"))
+    // Node universe = sources ∪ sinks (pure sinks still hold rank mass),
+    // with each node's outdeg and seed flag folded in ONCE — the iteration
+    // then needs a single equi-join per hop instead of two. Checkpointed:
+    // one small row per node, and every iteration's lineage restarts here
+    // instead of replaying the union/distinct.
+    val withDeg = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .join(broadcast(seed), Seq("node"), "left")
+    val withSeed = seeds match {
+      case Some(sd) =>
+        val seed = sd.select(col("node").cast("long").as("node"))
+          .distinct().withColumn("is_seed", lit(true))
+        withDeg.join(broadcast(seed), Seq("node"), "left")
+      case None => withDeg.withColumn("is_seed", lit(true))
+    }
+    val nodes = withSeed
       .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
         coalesce(col("is_seed"), lit(false)).as("is_seed"))
       .localCheckpoint()
@@ -135,6 +114,9 @@ object Graph {
     var pr = nodes.withColumn("pr",
       when(col("is_seed"), lit(scale)).otherwise(lit(0L)))
     for (i <- 1 to iters) {
+      // per-edge contribution computed on the NODE side before the join —
+      // one divide per node, not per edge; outdeg 0 rows yield null but
+      // never match (a node with no out-edges joins no e.src)
       val contrib = e
         .join(pr.select(col("node").as("src"),
           expr("pr div outdeg").as("c")), Seq("src"))
@@ -143,7 +125,13 @@ object Graph {
         .select(col("node"), col("outdeg"), col("is_seed"),
           (baseCol + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
             .as("pr"))
-      // lineage guard — see pageRankInt
+      // lineage guard (VERDICT r11 #5): the rank plan otherwise grows
+      // linearly with iters and user-controlled depth (iters >= ~30) pays
+      // analyzer/optimizer blowup. Every 8 hops the rank table — one
+      // small (node, outdeg, is_seed, pr) row per node — re-roots at a
+      // LogicalRDD, the dedupClusters checkpoint cadence. Default depths
+      // (<= 8) never hit this branch, so the pinned q131/q138 plans are
+      // unchanged.
       if (i % 8 == 0 && i < iters) pr = pr.localCheckpoint()
     }
     val top = pr.where(col("pr") > 0)

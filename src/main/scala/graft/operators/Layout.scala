@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the min/max stats are ONE scalar aggregate broadcast back
   * via a literal-free crossJoin (no driver round-trip in the plan — the
-  * 1-row side broadcasts); the key itself is a per-row codegen projection,
-  * and `zorderBy` finishes with a range repartition + within-partition
-  * sort by the key — the exact write layout a parquet sink wants.
+  * 1-row side broadcasts); the key itself is a per-row codegen projection.
+  * A writer that wants the Z-ordered layout range-repartitions on the key
+  * and sorts within partitions.
   */
 object Layout {
 
@@ -103,18 +103,5 @@ object Layout {
         quantize(col(xCol), col("__min_x"), col("__max_x"), bits),
         quantize(col(yCol), col("__min_y"), col("__max_y"), bits), bits))
       .drop("__min_x", "__max_x", "__min_y", "__max_y")
-  }
-
-  /** Z-order the frame for writing: key, range-repartition, sort within
-    * partitions — every output file covers a tight hyper-rectangle of the
-    * `cols` space, so parquet min/max stats prune multi-dimensionally.
-    */
-  def zorderBy(df: DataFrame, cols: Seq[String], bits: Int = 16,
-      numPartitions: Int = 0): DataFrame = {
-    val keyed = withZorderKey(df, cols, bits)
-    val parts = if (numPartitions > 0) numPartitions
-      else keyed.sparkSession.sessionState.conf.numShufflePartitions
-    keyed.repartitionByRange(parts, col("zkey"))
-      .sortWithinPartitions("zkey")
   }
 }

@@ -164,31 +164,6 @@ object Multimodal {
     (fmt, 1 + n % 64, 1 + (n * 7) % 64, 1 + n % 8, featSum)
   }
 
-  /** Batch audio-metadata extraction over a binary column — the same
-    * mapPartitions batch shape as extractFeatures, for RIFF/WAVE payloads;
-    * non-WAV rows yield nulls in the metadata fields (total function, no
-    * task failure on mixed-media columns).
-    */
-  def extractAudioFeatures(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes0) =>
-          val bytes = if (bytes0 == null) Array.emptyByteArray else bytes0
-          decodeWavHeader(bytes) match {
-            case Some((ch, rate, bits, n)) =>
-              (id, bytes.length, "wav", Some(ch), Some(rate), Some(bits), Some(n))
-            case None =>
-              (id, bytes.length, "unknown", None, None, None, None)
-          }
-        }
-      }
-      .toDF("id", "byte_len", "fmt", "channels", "sample_rate",
-        "bits_per_sample", "n_samples")
-  }
-
   /** Audio segmentation PLAN over a binary column: one row per fixed-size
     * sample window of each WAV payload — (seg_idx, start_sample,
     * seg_samples, frame_bytes, seg_bytes) — the decode-free slicing step a
@@ -324,40 +299,6 @@ object Multimodal {
   private def brandResult(brand: Option[String],
       mvhd: Option[(Long, Long)]): Option[(String, Long, Long)] =
     for { b <- brand; (ts, dur) <- mvhd if ts > 0 } yield (b, ts, dur)
-
-  /** Batch video-metadata extraction + deterministic frame sampling over a
-    * binary column: same mapPartitions batch shape as extractFeatures.
-    * For BMFF payloads, emits container metadata and the timestamps (in
-    * ticks) of `fps`-spaced sample points — the frame-sample schedule a
-    * real decoder would seek to; non-video rows yield nulls (total
-    * function, mixed-media safe).
-    */
-  def extractVideoFeatures(df: DataFrame, idCol: String, binCol: String,
-      sampleEveryNSec: Int = 10, maxSamples: Int = 8): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes0) =>
-          val bytes = if (bytes0 == null) Array.emptyByteArray else bytes0
-          decodeMp4Header(bytes) match {
-            case Some((brand, ts, dur)) =>
-              val durSec = dur.toDouble / ts
-              val stamps = (0L to math.min(
-                (durSec / sampleEveryNSec).toLong, (maxSamples - 1).toLong))
-                .map(k => k * sampleEveryNSec * ts)
-                .filter(_ <= dur)
-              (id, bytes.length, "mp4", Some(brand), Some(ts), Some(dur),
-                Some(durSec), Some(stamps))
-            case None =>
-              (id, bytes.length, "unknown", None, None, None, None, None)
-          }
-        }
-      }
-      .toDF("id", "byte_len", "fmt", "brand", "timescale", "duration_ticks",
-        "duration_sec", "sample_ticks")
-  }
 
   /** All three header families decoded in one mapPartitions pass (image /
     * RIFF-WAVE / ISO-BMFF; at most one decodes per row — container

@@ -29,8 +29,8 @@ object Retrieval {
     * form, and — because it is pure field arithmetic — bit-reproducible
     * across engines, which keeps the whole pipeline (tokenize → tf → df →
     * length-norm → ordered sum → top-k) inside the exact-hash oracle gate.
-    * (House rule: libm `ln` bits differ across engines — see
-    * TextAnalysis.tfIdfLog — so the ln form stays engine-API-only.)
+    * (The no-libm rule: libm `ln` bits differ across engines, so the ln
+    * form stays off every oracle-compared path.)
     *
     * The per-document sum folds term scores in sorted-term order (sorted
     * struct array + left fold from 0.0), so the double accumulation order
@@ -172,7 +172,7 @@ object Retrieval {
     * ranker change. Metric choice follows the oracle-gate house rule:
     * P/R/MRR are single integer divisions (exactly replayable), where
     * nDCG's log2 discounts would put libm bits in the compare path
-    * (the q42/tfIdfLog rule).
+    * (the no-libm rule).
     *
     * Scale shape: ranked is ≤ topK rows by construction — every join here
     * is broadcast-bounded; the label table aggregates once into a one-row
@@ -379,7 +379,7 @@ object Retrieval {
     * Per-term scores are q20 fixed-point quantized and summed as
     * integers (see the inline note at the aggregate — the measured
     * replacement for the interpreted rank-ordered double fold); logIdf =
-    * false keeps libm out of the compare path (house rule).
+    * false keeps libm out of the compare path (the no-libm rule).
     *
     * Output per query: qid, doc_id, n_terms, score_q20 (fixed-point
     * BM25·2²⁰), rn, cos, is_hard = cos IS NOT NULL AND cos < cosThreshold.

@@ -19,10 +19,6 @@ object Sampling {
   def pctBucket(id: Column, salt: String): Column =
     graft_hash64(concat(id.cast("string"), lit(":"), lit(salt))) % 100
 
-  /** Keep ~pct% of rows, deterministically by id hash. */
-  def sampleByHash(df: DataFrame, idCol: String, pct: Int, salt: String = "graft"): DataFrame =
-    df.where(pctBucket(col(idCol), salt) < pct)
-
   /** Assign train/val/test splits by hash bucket: [0,train) → "train",
     * [train, train+val) → "val", rest → "test".
     */
@@ -448,14 +444,6 @@ object Decontaminate {
       .drop("__fp")
   }
 
-  /** Corpus with exact benchmark collisions removed (anti join). */
-  def removeExact(corpus: DataFrame, benchmark: DataFrame, textCol: String): DataFrame = {
-    val bfp = benchmark.select(fp(textCol).as("__fp")).distinct()
-    corpus.withColumn("__fp", fp(textCol))
-      .join(broadcast(bfp), Seq("__fp"), "left_anti")
-      .drop("__fp")
-  }
-
   /** Near-duplicate benchmark contamination (the GPT-3/C4-style n-gram
     * overlap rule): a corpus doc is contaminated when ≥ `threshold` of its
     * distinct k-token shingles also occur anywhere in the benchmark set.
@@ -564,18 +552,6 @@ object Decontaminate {
       .withColumn("contaminated", col("n_hits") > 0L)
   }
 
-  /** Corpus rows with NO colliding `n`-gram (the removal variant of
-    * [[flagNgramCollision]], mirroring [[removeExact]]'s keep-the-schema
-    * contract): all original columns, same one-scan zero-shuffle shape.
-    */
-  def removeNgramCollision(corpus: DataFrame, benchmark: DataFrame,
-      textCol: String, n: Int = 13, maxBenchHashes: Int = 1 << 21): DataFrame = {
-    val probe = benchmarkWindowHashes(benchmark, textCol, n, maxBenchHashes)
-    corpus.filter(
-      graft.functions.hash_hits_128(
-        graft.functions.rolling_window_hashes(col(textCol), n), probe) === 0L)
-  }
-
   /** Fuzzy benchmark contamination — the near-duplicate-MATCH protocol
     * (RefinedWeb / Llama-style fuzzy decontamination; Penedo et al. 2023):
     * a corpus doc is contaminated when its shingle-set Jaccard similarity
@@ -599,26 +575,27 @@ object Decontaminate {
     * benchmark size × collisions) see the exact-verification shingle
     * projection — the broadcast join sits BELOW it in the plan. Three
     * narrow corpus scans, zero corpus-wide exchanges; the only shuffle is
-    * the candidate-pair distinct. Signature arithmetic is bit-identical
-    * to [[Dedup.minhashFromHashed]] (same hashA/hashB permutations, same
-    * mod-1e9+7 band fold), so the DuckDB oracle replays it exactly.
+    * the candidate-pair distinct. The bands are the ones q32's self-join
+    * uses ([[Dedup.minhashBandRows]]: same hashA/hashB permutations, same
+    * mod-1e9+7 band fold), so the DuckDB oracle replays them exactly.
+    *
+    * Run over only the rows [[ingestGate]]'s fuzzy screen quarantined, this
+    * is the confirm step of that loop, and a lossless one: its candidates
+    * are exactly the band collisions the screen fires on, so a row with no
+    * collision is reported clean with zero work, and screen ∘ confirm ≡ the
+    * batch protocol (pinned by QuarantineConfirmSpec).
     */
   def fuzzyContamination(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, k: Int = 6, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.8): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val aCo = (0 until numHashes).map(Dedup.hashA)
-    val bCo = (0 until numHashes).map(Dedup.hashB)
     // ONE fused codegen kernel per row (shingle → permute → min → band;
     // graft.expr.MinhashBands) — the first cut ran the signature as an
     // interpreted array_distinct ∘ aggregate ∘ zip_with chain and the
     // corpus scan dominated the query (3.28 s clean sf0.1). Shingle-less
     // docs return no bands, so they can never band-collide.
-    def summary: Column =
-      graft.functions.minhash_bands(col(textCol), k, aCo, bCo, bands)
-    def bandFrame(df: DataFrame): DataFrame = df
-      .select(col(idCol).cast("long").as("id"), summary.as("ms"))
-      .select(col("id"), posexplode(slice(col("ms"), 2, bands)).as(Seq("j", "bval")))
+    def bandFrame(df: DataFrame): DataFrame = Dedup.minhashBandRows(
+      df.select(col(idCol).cast("long").as("id"), col(textCol)), "id", textCol,
+      k, numHashes, bands)
     val benchBands = bandFrame(benchmark)
       .select(col("id").as("id_b"), col("j"), col("bval"))
     val cand = bandFrame(corpus)
@@ -643,37 +620,14 @@ object Decontaminate {
       sum(when(col("jaccard") >= threshold, 1L).otherwise(0L)).as("n_matches"),
       max(col("jaccard")).as("best_jaccard"))
     corpus.select(col(idCol).cast("long").as("id"),
-        element_at(summary, 1).as("n_shingles"))
+        element_at(Dedup.minhashSummary(col(textCol), k, numHashes, bands), 1)
+          .as("n_shingles"))
       .join(broadcast(agg), Seq("id"), "left")
       .withColumn("n_candidates", coalesce(col("n_candidates"), lit(0L)))
       .withColumn("n_matches", coalesce(col("n_matches"), lit(0L)))
       .withColumn("best_jaccard", coalesce(col("best_jaccard"), lit(0.0)))
       .withColumn("contaminated", col("n_matches") > 0L)
   }
-
-  /** The CONFIRM half of the [[ingestGate]] quarantine loop (VERDICT r19
-    * #4): run the batch exact-Jaccard verify over the rows the streaming
-    * fuzzy screen quarantined. Restricting [[fuzzyContamination]] to the
-    * quarantined subset is LOSSLESS: its candidate pairs are exactly the
-    * band collisions the screen fires on (same `minhash_bands` arithmetic,
-    * the key is a bijection of the (j, bval) match), so a document with no
-    * band collision has no candidates and the pure-batch protocol reports
-    * it clean with zero work. Hence screen ∘ confirm ≡ the batch fuzzy
-    * protocol — pinned end-to-end by QuarantineConfirmSpec over a
-    * MemoryStream + foreachBatch quarantine.
-    *
-    * Scale shape: the confirm pass inherits fuzzyContamination's (corpus
-    * never shuffles; candidates bounded by benchmark × collisions) but
-    * runs over ONLY the quarantined rows — at a sane contamination rate
-    * that is a vanishing fraction of the stream, so the expensive verify
-    * join touches ppm-scale data while the full corpus sees nothing but
-    * the stateless screen projections.
-    */
-  def confirmFuzzyQuarantine(quarantined: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, k: Int = 6, numHashes: Int = 16,
-      bands: Int = 4, threshold: Double = 0.8): DataFrame =
-    fuzzyContamination(quarantined.select(col(idCol), col(textCol)),
-      benchmark, idCol, textCol, k, numHashes, bands, threshold)
 
   /** The STREAMING-NATIVE ingest-time decontamination gate (VERDICT r18
     * stretch #8): the per-document protocol flags of [[auditBySource]]
@@ -725,10 +679,8 @@ object Decontaminate {
       benchmark.select(explode(array_distinct(
         graft.functions.shingle_hashes(col(textCol), containK))).as("h")),
       s"$containK-shingle hashes")
-    val aCo = (0 until fuzzyNumHashes).map(Dedup.hashA)
-    val bCo = (0 until fuzzyNumHashes).map(Dedup.hashB)
     def bandKeys: Column = {
-      val ms = graft.functions.minhash_bands(col(textCol), fuzzyK, aCo, bCo, fuzzyBands)
+      val ms = Dedup.minhashSummary(col(textCol), fuzzyK, fuzzyNumHashes, fuzzyBands)
       transform(slice(ms, 2, fuzzyBands),
         (bval, j) => bval * lit(fuzzyBands.toLong) + j.cast("long"))
     }

@@ -361,7 +361,8 @@ object TextAnalysis {
   }
 
   /** Top-n terms per document by a rational TF·(N/df) weight (oracle-safe:
-    * no transcendental functions; ln-based TF-IDF is `tfIdfLog` below).
+    * no transcendental functions, the no-libm rule: libm `ln` bits may
+    * differ across engines, so no log sits on an oracle-compared path).
     */
   def tfIdfTop(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val tok = df.select(col(idCol).as("id"), explode(toks(col(textCol))).as("tok"))
@@ -378,18 +379,6 @@ object TextAnalysis {
     scored.withColumn("rn", row_number().over(w))
       .where(col("rn") <= n)
       .select(col("id"), col("tok"), col("cnt"), col("df"), col("score"), col("rn"))
-  }
-
-  /** Classic ln-based TF-IDF (engine API; not oracle-compared since libm
-    * log bits may differ across engines).
-    */
-  def tfIdfLog(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = df.select(col(idCol).as("id"), explode(toks(col(textCol))).as("tok"))
-    val tf = tok.groupBy(col("id"), col("tok")).agg(count(lit(1)).as("cnt"))
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val nDocs = df.select(countDistinct(col(idCol)).as("n_docs"))
-    tf.join(dfreq, Seq("tok")).crossJoin(broadcast(nDocs))
-      .withColumn("tfidf", col("cnt") * log(col("n_docs") / col("df")))
   }
 
   /** Global top word n-grams by frequency. */
@@ -1206,7 +1195,7 @@ object TextAnalysis {
     * probability of its bigrams under a reference-corpus bigram model.
     * Seen bigram → ⌊C(w₁w₂)·S / C(w₁)⌋; unseen → the paper's α=0.4
     * unigram backoff ⌊2·C(w₂)·S / (5·T)⌋ (exact integers — perplexity's
-    * log is banned from the compare path by the tfIdfLog house rule, and
+    * log is banned from the compare path by the no-libm rule, and
     * mean conditional probability ranks fluent-vs-disfluent the same way:
     * high = predictable text, near-zero = word salad / wrong language).
     *
@@ -1559,7 +1548,7 @@ object TextAnalysis {
   /** Character-diversity gibberish gate: per document, exact code-point
     * counts (total, distinct) and the Simpson collision numerator
     * Σ cᵢ·(cᵢ−1) — the log-free entropy surrogate (libm `ln` bits differ
-    * across engines, the tfIdfLog house rule, so Shannon entropy cannot sit
+    * across engines, the no-libm rule, so Shannon entropy cannot sit
     * on the exact-hash gate; collision probability ranks the same
     * pathologies). A document is flagged when its repeated-pair rate
     * exceeds `maxCollPermille` (low-diversity junk: aaaa…, repeated

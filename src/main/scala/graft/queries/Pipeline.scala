@@ -1811,7 +1811,7 @@ object Pipeline {
 
   /** BM25 retrieval (q127): the ranked-search stage over the whitespace
     * corpus, rational-idf mode so every double stays field arithmetic (no
-    * libm ln in the comparison path — the q42/tfIdfLog house rule). The
+    * libm ln in the comparison path — the no-libm rule). The
     * oracle replays tf, df, the N/avgdl stats, the exact operand
     * association of the per-term score, and the term-sorted left fold of
     * the per-document sum — any drift in tokenization, weighting order, or

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 
@@ -30,7 +31,9 @@ object Tables {
     * `events.ts` has shipped as both INT64 TIMESTAMP(NANOS) and native
     * `timestamp[us]` across testdata generations, so the read is
     * schema-adaptive:
-    *   - LongType (nanos read under `nanosAsLong`): truncate to micros —
+    *   - LongType (an INT64 TIMESTAMP(NANOS) file, read under
+    *     `nanosAsLong`, which the read sets on the session for such a file
+    *     only, because the scan needs it too): truncate to micros —
     *     exactly what DuckDB does reading the same file. Integer `div`
     *     (not `/`) because epoch-nanos ≈ 1.7e18 exceeds double's 53-bit
     *     mantissa.
@@ -45,8 +48,13 @@ object Tables {
     if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = file(spark, path)
+      // Only an INT64 TIMESTAMP(NANOS) ts needs `nanosAsLong`, both to
+      // convert the footer and later when the scan reads the file, so the
+      // flag is set on the session for such a file and left alone otherwise.
+      val footer = GraftParquetBridge.footer(spark, path)
+      if (GraftParquetBridge.isInt64Nanos(footer, "ts"))
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val df = read(spark, path, footer)
       df.schema("ts").dataType match {
         case LongType         => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
@@ -67,7 +75,10 @@ object Tables {
     * converts it, without the one-task inference job. Fails on a directory.
     */
   private[graft] def file(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(GraftParquetBridge.footerSchema(spark, path)).parquet(path)
+    read(spark, path, GraftParquetBridge.footer(spark, path))
+
+  private def read(spark: SparkSession, path: String, footer: Footer): DataFrame =
+    spark.read.schema(GraftParquetBridge.schemaOf(spark, footer, path)).parquet(path)
 
   /** Exact decimal view of a 2-dp double column: makes SUM/ordering
     * deterministic and bit-identical across Spark and DuckDB (double

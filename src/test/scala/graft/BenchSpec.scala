@@ -25,12 +25,12 @@ class BenchSpec extends AnyFunSuite {
     Locale.setDefault(Locale.GERMANY)
     try {
       val runs = Seq(
-        QueryRun("q01_a", 1.23456, 1.5, work, 1, ""),
-        QueryRun("q02_b", -1.0, -1.0, Work(), 0, "IllegalStateException: boom"),
-        QueryRun("q62_version_call", 0.0216, 1.1, Work(), 0, ""))
+        QueryRun("q01_a", 1.23456, work, 1, ""),
+        QueryRun("q02_b", -1.0, Work(), 0, "IllegalStateException: boom"),
+        QueryRun("q62_version_call", 0.0216, Work(), 0, ""))
       val q = json.readTree(Bench.queryLine(runs.head))
       assert(q.get("kind").asText == "query" && q.get("query").asText == "q01_a")
-      assert(q.get("wall_s").asDouble == 1.2346 && q.get("spread").asDouble == 1.5)
+      assert(q.get("wall_s").asDouble == 1.2346 && !q.has("spread"))
       assert(q.get("jobs").asLong == 3 && q.get("stages").asLong == 4 && q.get("tasks").asLong == 12)
       assert(q.get("build_jobs").asLong == 1, "jobs run while the DataFrame was built")
       assert(q.get("cpu_s").asDouble == 1.235 && q.get("shuffle_mb").asDouble == 2.5 &&
@@ -41,13 +41,12 @@ class BenchSpec extends AnyFunSuite {
       assert(failed.get("error").asText == "IllegalStateException: boom")
       assert(failed.get("build_jobs").asLong == 0)
       val s = json.readTree(Bench.summaryLine(runs, "/data/sf0.1"))
-      val fields = Seq("metric", "value", "unit", "n", "fails", "median_rep_spread",
+      val fields = Seq("metric", "value", "unit", "n", "fails",
         "version_call_floor_sec", "cheap5_floor_sec", "sf")
       assert(fields.forall(s.has) && s.size == fields.size)
       assert(s.get("metric").asText == "total_summary" && s.get("n").asInt == 3)
       assert(s.get("fails").asInt == 1 && s.get("value").asDouble == 1.23456 + 0.0216)
       assert(s.get("version_call_floor_sec").asDouble == 0.022)
-      assert(s.get("median_rep_spread").asDouble == 1.5)
       assert(s.get("cheap5_floor_sec").asDouble == -1.0, "fewer than 5 successful queries")
     } finally Locale.setDefault(saved)
   }
@@ -57,7 +56,7 @@ class BenchSpec extends AnyFunSuite {
     // worst case per char once escaped: control chars (6 bytes), quotes and
     // backslashes (2), three-byte UTF-8 and surrogate pairs
     val error = ("\u0001\"\\語😀" * 2100).take(10240)
-    val line = Bench.queryLine(QueryRun(name, -1.0, -1.0, work, work.jobs, error))
+    val line = Bench.queryLine(QueryRun(name, -1.0, work, work.jobs, error))
     assert(line.getBytes(StandardCharsets.UTF_8).length < 4096)
     val q = json.readTree(line)
     assert(q.get("query").asText == name)
@@ -84,15 +83,6 @@ class BenchSpec extends AnyFunSuite {
     assert((b.jobs, b.stages, b.tasks) == ((2L, 3L, 5L)))
     assert(b.shuffleBytes > 0)
     assert(counters("bench-spec:none") == Work())
-  }
-
-  test("adaptive third rep fires only on discordant non-trivial reps") {
-    // VERDICT r16 #8: single-rep outliers need a tiebreaker; idle hosts
-    // and sub-100ms jitter must not pay for one
-    assert(Bench.needsExtraRep(Seq(1.0, 2.0)), "2x disagreement on a 1s query")
-    assert(!Bench.needsExtraRep(Seq(1.0, 1.3)), "within-band reps")
-    assert(!Bench.needsExtraRep(Seq(0.02, 0.08)), "sub-100ms jitter exempt")
-    assert(Bench.needsExtraRep(Seq(0.2, 0.9)), "0.1s+ queries qualify")
   }
 
   test("SPARK_GRAFT_ONLY: exact names select a sorted subset; an unknown name fails, naming it") {

@@ -51,20 +51,6 @@ class LayoutDsirCdcSpec extends AnyFunSuite {
     assert(byXy((0L, 0L)) == 0L && byXy((7L, 7L)) == 63L)
   }
 
-  test("zorderBy: output is range-partitioned and sorted by zkey") {
-    val df = (0 until 100).map(i => (i.toLong, ((i * 37) % 100).toLong,
-      ((i * 61) % 100).toLong)).toDF("id", "x", "y")
-    val parts = Layout.zorderBy(df, Seq("x", "y"), bits = 8, numPartitions = 4)
-      .select("zkey").rdd.glom().collect().map(_.map(_.getLong(0)))
-    // sorted within every partition, and partitions cover disjoint ranges
-    parts.foreach(p => assert(p.sameElements(p.sorted)))
-    val nonEmpty = parts.filter(_.nonEmpty)
-    nonEmpty.sliding(2).foreach {
-      case Array(a, b) => assert(a.last <= b.head)
-      case _ =>
-    }
-  }
-
   test("hilbertKey: bijection over the full 16x16 grid with Manhattan-adjacent consecutive cells") {
     val cells = for (x <- 0 until 16; y <- 0 until 16) yield (x, y)
     val r = cells.toDF("x", "y")

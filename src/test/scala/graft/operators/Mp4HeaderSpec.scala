@@ -61,19 +61,14 @@ class Mp4HeaderSpec extends AnyFunSuite {
     assert(Multimodal.decodeMp4Header(mp4).isEmpty)
   }
 
-  test("extractVideoFeatures: schedule spaced, capped, mixed column total") {
+  test("decodeAllHeaders: a BMFF row gets brand, timescale and duration; a text row gets nulls") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val video = ftyp("isom") ++ box("moov", mvhdV0(600, 600 * 45)) // 45 s
-    val rows = Seq((1L, video), (2L, "plain text".getBytes))
-    val out = Multimodal.extractVideoFeatures(rows.toDF("id", "bin"), "id", "bin")
-      .orderBy("id")
-      .select("id", "fmt", "duration_sec", "sample_ticks")
-      .collect()
-    assert(out(0).getString(1) == "mp4")
-    assert(out(0).getDouble(2) == 45.0)
-    // 45 s at one sample per 10 s → ticks at 0,10,20,30,40 s × 600
-    assert(out(0).getSeq[Long](3) == Seq(0L, 6000L, 12000L, 18000L, 24000L))
-    assert(out(1).getString(1) == "unknown" && out(1).isNullAt(2))
+    val video = ftyp("isom") ++ box("moov", mvhdV0(600, 600 * 45))
+    val r = Multimodal.decodeAllHeaders(
+        Seq((1L, video), (2L, "plain text".getBytes)).toDF("id", "bin"), "id", "bin")
+      .orderBy("id").select("id", "mp4_brand", "timescale", "duration_ticks").collect()
+    assert(r(0).getString(1) == "isom" && r(0).getLong(2) == 600L && r(0).getLong(3) == 27000L)
+    assert(r(1).isNullAt(1) && r(1).isNullAt(2) && r(1).isNullAt(3))
   }
 }

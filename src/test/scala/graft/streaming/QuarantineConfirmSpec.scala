@@ -9,7 +9,8 @@ import graft.operators.Decontaminate
 /** The quarantine→confirm loop as a TESTED path (VERDICT r19 #4): the
   * streaming gate's `fuzzy_candidate` rows flow through a foreachBatch
   * quarantine into the batch exact-Jaccard verify
-  * (Decontaminate.confirmFuzzyQuarantine), and the confirmed set equals
+  * (Decontaminate.fuzzyContamination over the quarantined rows), and the
+  * confirmed set equals
   * the pure-batch fuzzy protocol's on the same corpus — the r18-q213
   * lesson one layer up: "the batch audit confirms" must be a spec, not a
   * doc claim.
@@ -68,7 +69,7 @@ class QuarantineConfirmSpec extends AnyFunSuite {
     assert(!qIds.contains(3L), "clean doc must never be quarantined")
 
     // CONFIRM: the batch exact-Jaccard verify over only the quarantined rows
-    val confirmed = Decontaminate.confirmFuzzyQuarantine(
+    val confirmed = Decontaminate.fuzzyContamination(
         quarantined.toSeq.toDF("doc_id", "text"), bench, "doc_id", "text",
         threshold = thr)
       .collect().map(r => r.getLong(r.fieldIndex("id")) ->
